@@ -1622,7 +1622,7 @@ object SparkEntry {
       graft.sources.Sinks.rawPartitionedSink(Tables.events(s, dir),
         tmp(dir, "raw"))),
 
-    // S3: staging overwrite sink, idempotent rerun (round-trip)
+    // S3: staging overwrite sink, one truncate-reload write (round-trip)
     "sink_staging_overwrite" -> ((s, dir) =>
       graft.sources.Sinks.stagingOverwrite(Tables.orders(s, dir),
         tmp(dir, "staging"))),
@@ -1834,7 +1834,7 @@ object SparkEntry {
           requiredCols = Seq("event_id", "user_id", "event_type"),
           keys = eventKeys),
         ts = col("ts"), tiebreak = Seq(col("event_id")),
-        tableName = "events", auditPath = tmp(dir, "pipeline_audit")).merged
+        tableName = "events", auditPath = freshTmp(dir, "pipeline_audit")).merged
     }),
 
     // the reference's FAILED short-circuit (data_pipeline.py:259-262):
@@ -1855,7 +1855,7 @@ object SparkEntry {
           keys = eventKeys),
         ts = col("ts"), tiebreak = Seq(col("event_id")),
         tableName = "events",
-        auditPath = tmp(dir, "pipeline_audit_failed"))
+        auditPath = freshTmp(dir, "pipeline_audit_failed"))
         .audit
         .withColumn("source_files", array_join(col("source_files"), ","))
     }),
@@ -3850,6 +3850,15 @@ object SparkEntry {
     */
   private def tmp(dir: String, name: String): String =
     s"/root/repo/target/graft-tmp/${name}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+
+  /** [[tmp]], emptied first: for an entry whose sink appends (the audit
+    * log), so every run of it returns the same rows.
+    */
+  private def freshTmp(dir: String, name: String): String = {
+    val p = tmp(dir, name)
+    Distribute.deleteRecursively(new java.io.File(p))
+    p
+  }
 
   /** The raw 5-column events slice both curation front doors ingest. */
   private def rawEventsSlice(s: SparkSession, dir: String): DataFrame =

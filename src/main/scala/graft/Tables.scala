@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetFooter
 
 /** Loaders for the driver's parquet testdata (TESTDATA.md).
   * All operators take `(SparkSession, sfDir)` and read via these so the
@@ -22,8 +23,23 @@ object Tables {
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     Option(recording.get()).foreach(_ += name)
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
   }
+
+  /** `spark.read.parquet(paths)` without its schema-inference job: the
+    * footer Spark's non-merging inference would read is read here, on
+    * the driver, with Spark's own reader and converter, and handed to
+    * the reader as its schema. Where no footer exists (an empty
+    * directory), Spark's own read runs and raises its own error.
+    * The price is a second driver-side listing of `paths` (the reader
+    * lists them again), in place of a job that reads one footer.
+    * Schema-merging reads keep `spark.read.option("mergeSchema", ...)`.
+    */
+  def parquet(spark: SparkSession, paths: String*): DataFrame =
+    GraftParquetFooter.schema(spark, paths) match {
+      case Some(s) => spark.read.schema(s).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
 
   def region(s: SparkSession, d: String)     = t(s, d, "region")
   def nation(s: SparkSession, d: String)     = t(s, d, "nation")

@@ -174,7 +174,7 @@ object Distribute {
     df.repartitionByRange(ranges, col(sortCol))
       .sortWithinPartitions(col(sortCol))
       .write.mode("overwrite").parquet(scratchDir)
-    val stats = spark.read.parquet(scratchDir)
+    val stats = graft.Tables.parquet(spark, scratchDir)
       .select(col(sortCol), col("_metadata.file_path").as("f"))
       .groupBy(col("f"))
       .agg(min(col(sortCol)).as("mn"), max(col(sortCol)).as("mx"))
@@ -191,9 +191,9 @@ object Distribute {
     // schema, exactly what the full-scan filter would produce
     if (keep.isEmpty) df.filter(lit(false))
     else if (keep.length > maxKeepFiles)
-      spark.read.parquet(scratchDir)
+      graft.Tables.parquet(spark, scratchDir)
         .filter(col(sortCol) >= lo && col(sortCol) <= hi)
-    else spark.read.parquet(keep.toIndexedSeq: _*)
+    else graft.Tables.parquet(spark, keep.toIndexedSeq: _*)
       .filter(col(sortCol) >= lo && col(sortCol) <= hi)
   }
 
@@ -225,7 +225,7 @@ object Distribute {
       .option(s"parquet.bloom.filter.enabled#$keyCol", "true")
       .option(s"parquet.bloom.filter.expected.ndv#$keyCol", ndv.toString)
       .parquet(scratchDir)
-    spark.read.parquet(scratchDir)
+    graft.Tables.parquet(spark, scratchDir)
       .filter(col(keyCol).isin(lookup: _*))
   }
 
@@ -248,7 +248,7 @@ object Distribute {
                   maxKeepFiles: Int = 100000): DataFrame = {
     zOrderLayout(df, col(a), col(b), bits, partitions)
       .write.mode("overwrite").parquet(scratchDir)
-    val stats = spark.read.parquet(scratchDir)
+    val stats = graft.Tables.parquet(spark, scratchDir)
       .select(col(a), col(b), col("_metadata.file_path").as("f"))
       .groupBy(col("f"))
       .agg(min(col(a)).as("mna"), max(col(a)).as("mxa"),
@@ -260,9 +260,9 @@ object Distribute {
     val pred = col(a) >= loA && col(a) <= hiA &&
       col(b) >= loB && col(b) <= hiB
     val base =
-      if (keep.isEmpty) spark.read.parquet(scratchDir).filter(lit(false))
-      else if (keep.length > maxKeepFiles) spark.read.parquet(scratchDir)
-      else spark.read.parquet(keep.toIndexedSeq: _*)
+      if (keep.isEmpty) graft.Tables.parquet(spark, scratchDir).filter(lit(false))
+      else if (keep.length > maxKeepFiles) graft.Tables.parquet(spark, scratchDir)
+      else graft.Tables.parquet(spark, keep.toIndexedSeq: _*)
     base.filter(pred).drop("z")
   }
 
@@ -282,7 +282,7 @@ object Distribute {
     val fact = events.select(col("event_id"), col("user_id"),
         col("value"), to_date(col("ts")).as("day"))
     fact.write.mode("overwrite").partitionBy("day").parquet(scratchDir)
-    val part = spark.read.parquet(scratchDir)
+    val part = graft.Tables.parquet(spark, scratchDir)
     // the selective dimension: distinct days tagged, filtered to the
     // [dayLo, dayHi] day-of-month slice — built small and broadcastable
     val dim = fact.select(col("day")).distinct()

@@ -41,7 +41,7 @@ object Pipeline {
 
     def audit(status: String, n: Long): DataFrame =
       Sinks.auditAppend(spark, auditPath,
-        Seq((tableName, n, status, clock, sourceFiles)), fresh = true)
+        Seq((tableName, n, status, clock, sourceFiles)))
 
     if (fatal.nonEmpty) {
       val a = audit(s"FAILED: ${fatal.mkString(",")}", 0L) // :259-262

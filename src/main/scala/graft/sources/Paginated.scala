@@ -1,9 +1,13 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JSONOptions, JacksonParser}
+import org.apache.spark.sql.catalyst.util.FailureSafeParser
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 /** Paginated REST source (reference S1, `pipeline/data_pipeline.py:26-65`).
@@ -77,8 +81,31 @@ object Paginated {
     throw last
   }
 
+  /** `(records size, has_next)` of one page, read on the driver by
+    * Spark's own JSON parser with the options and failure handling of
+    * `spark.read.schema(envelopeSchema).json(path)`, taking its first row
+    * as the Spark-read probe's `head()` did: one envelope per line, NULL
+    * for what does not parse (partial rows kept), so a NULL or non-array
+    * `records` counts 0 and a NULL or non-boolean `has_next` is false.
+    * A page with no envelope throws, as `head()` on no rows did.
+    */
+  private[graft] def probe(path: String): (Int, Boolean) = {
+    val options = new JSONOptions(Map.empty[String, String], "UTC", "_corrupt_record")
+    val parser = new JacksonParser(envelopeSchema, options, allowArrayAsStructs = true, Nil)
+    val rows = new FailureSafeParser[String](
+      line => parser.parse(line, CreateJacksonParser.string, UTF8String.fromString),
+      options.parseMode, envelopeSchema, options.columnNameOfCorruptRecord)
+    val text = new String(Files.readAllBytes(Paths.get(path)), StandardCharsets.UTF_8)
+    val env = text.split("\\r\\n|\\r|\\n").iterator.flatMap(rows.parse).next()
+    val n = if (env.isNullAt(0)) 0 else env.getArray(0).numElements
+    val page = if (env.isNullAt(1)) null else env.getStruct(1, 1)
+    (n, page != null && !page.isNullAt(0) && page.getBoolean(0))
+  }
+
   /** Fetch loop with the reference's stop conditions; returns the unioned
-    * record set as a DataFrame. Each page read runs under [[withRetries]].
+    * record set as a DataFrame. Each page is probed on the driver under
+    * [[withRetries]], as the reference GETs each page; the kept pages are
+    * then read by Spark, so no Spark job runs until the result is used.
     */
   def fetchAll(spark: SparkSession, pagesDir: String,
                maxPages: Int = 10000, maxRetries: Int = 2): DataFrame = {
@@ -89,16 +116,11 @@ object Paginated {
       val path = s"$pagesDir/page_$p.json"
       if (!Files.exists(Paths.get(path))) continue = false // non-200 analog (:36-38)
       else {
-        val env = withRetries(maxRetries) { () =>
-          spark.read.schema(envelopeSchema).json(path)
-            .select(size(coalesce(col("records"), array())).as("n"),
-                    coalesce(col("pagination.has_next"), lit(false)).as("has_next"))
-            .head()
-        }
-        if (env.getInt(0) == 0) continue = false           // empty page (:42-43)
+        val (n, hasNext) = withRetries(maxRetries)(() => probe(path))
+        if (n == 0) continue = false                       // empty page (:42-43)
         else {
           keep += path
-          if (!env.getBoolean(1)) continue = false         // has_next falsy (:55-56)
+          if (!hasNext) continue = false                   // has_next falsy (:55-56)
         }
       }
       p += 1

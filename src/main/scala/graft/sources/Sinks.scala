@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Sinks (reference S2/S3/S4, `pipeline/data_pipeline.py:45-53,126-152,
   * 219-242`). Each sink function writes and returns the read-back
   * DataFrame so the driver contract can verify sink round-trips.
@@ -32,15 +34,15 @@ object Sinks {
         col("day").cast("int"))
   }
 
-  /** S3: staging sink — full overwrite, schema carried by parquet
-    * (`WRITE_TRUNCATE` + autodetect, `data_pipeline.py:140-144`). Written
-    * twice to prove idempotence (the reference's truncate-reload makes
-    * reruns safe, SURVEY §4.1).
+  /** S3: staging sink — one full overwrite, schema carried by parquet
+    * (`WRITE_TRUNCATE` + autodetect, `data_pipeline.py:140-144`). The
+    * overwrite replaces every file under `outPath`, so a rerun leaves the
+    * same rows and none of the earlier files (the reference's
+    * truncate-reload, SURVEY §4.1); `SinksSpec` proves that on a rerun.
     */
   def stagingOverwrite(df: DataFrame, outPath: String): DataFrame = {
     df.write.mode("overwrite").parquet(outPath)
-    df.write.mode("overwrite").parquet(outPath) // idempotent rerun
-    df.sparkSession.read.parquet(outPath)
+    Tables.parquet(df.sparkSession, outPath)
   }
 
   /** ORC round-trip: column format parity beyond parquet — types carry
@@ -80,15 +82,17 @@ object Sinks {
     val spark = df.sparkSession
     df.repartition(smallFiles) // simulate fragmented micro-batch appends
       .write.mode("overwrite").parquet(s"$outPath/small")
-    spark.read.parquet(s"$outPath/small")
+    Tables.parquet(spark, s"$outPath/small")
       .coalesce(targetFiles)
       .write.mode("overwrite").parquet(s"$outPath/compact")
-    spark.read.parquet(s"$outPath/compact")
+    Tables.parquet(spark, s"$outPath/compact")
   }
 
   /** S4: append-only audit sink with ARRAY<STRING> source_files column
-    * (`data_pipeline.py:219-242`). `fresh=true` clears the path first so
-    * a verification run is deterministic; production calls append only.
+    * (`data_pipeline.py:219-242`): every call adds its rows and keeps the
+    * rows of earlier calls, as the reference's audit log does, and
+    * returns the whole log. `fresh=true` clears the path first, for a
+    * registry entry that must return the same rows on every run.
     */
   def auditAppend(spark: SparkSession, outPath: String,
                   rows: Seq[(String, Long, String, String, Seq[String])],
@@ -110,6 +114,6 @@ object Sinks {
           array(files.map(lit): _*).cast("array<string>").as("source_files"))
         .write.mode("append").parquet(outPath)
     }
-    spark.read.parquet(outPath)
+    Tables.parquet(spark, outPath)
   }
 }

@@ -232,7 +232,7 @@ object Streaming {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         val baseV = latestSnapshotVersion(snapRoot, below = id, conf0)
           .getOrElse(-1L)
-        val base = spark0.read.parquet(snapshotDir(snapRoot, baseV))
+        val base = graft.Tables.parquet(spark0, snapshotDir(snapRoot, baseV))
         merge(base, batch).write.mode("overwrite")
           .parquet(snapshotDir(snapRoot, id))
         // GC: anything below this tick's merge base can never be read
@@ -255,7 +255,7 @@ object Streaming {
   /** Read the latest committed snapshot under `snapRoot`. */
   private[graft] def latestSnapshot(spark: SparkSession,
                                     snapRoot: String): DataFrame =
-    spark.read.parquet(snapshotDir(snapRoot,
+    graft.Tables.parquet(spark, snapshotDir(snapRoot,
       latestSnapshotVersion(snapRoot, Long.MaxValue,
         spark.sparkContext.hadoopConfiguration).getOrElse(-1L)))
 

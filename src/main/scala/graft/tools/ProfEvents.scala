@@ -30,7 +30,7 @@ object ProfEvents {
       df.write.format("noop").mode("overwrite").save()
 
     def rendered() = {
-      val ev = spark.read.parquet(s"$sfDir/events.parquet")
+      val ev = graft.Tables.parquet(spark, s"$sfDir/events.parquet")
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), col("props"))
       val flat = graft.ops.Flatten.flattenJsonColumn(ev, "props",

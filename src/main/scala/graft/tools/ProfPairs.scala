@@ -31,7 +31,7 @@ object ProfPairs {
     // events front-door corpus: exact-dedup survivors of the rendered
     // event docs (the shape curationVerdicts feeds the near stage)
     def eventsSurvivors() = {
-      val ev = spark.read.parquet(s"$sfDir/events.parquet")
+      val ev = graft.Tables.parquet(spark, s"$sfDir/events.parquet")
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), col("props"))
       val flat = graft.ops.Flatten.flattenJsonColumn(ev, "props",
@@ -55,7 +55,7 @@ object ProfPairs {
         .select(col("doc_id"), col("text"))
     }
 
-    def docsCorpus() = spark.read.parquet(s"$sfDir/documents.parquet")
+    def docsCorpus() = graft.Tables.parquet(spark, s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
 
     for ((label, mk, cap) <- Seq(

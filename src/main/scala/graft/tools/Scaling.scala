@@ -110,7 +110,7 @@ object Scaling {
       if f.getName.endsWith(".parquet")
     } yield {
       val t = f.getName.stripSuffix(".parquet")
-      (t, dir) -> spark.read.parquet(f.getPath).count()
+      (t, dir) -> graft.Tables.parquet(spark, f.getPath).count()
     }).toMap
 
   /** 2 / 1 / 0 honest decades for a table set, from measured counts:

@@ -1,0 +1,104 @@
+package graft
+
+import java.io.File
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.ops.{Meta, Quality}
+import graft.runner.Pipeline
+import graft.sources.{Paginated, Sinks}
+
+/** Spark jobs launched by construction and by the daily load, pinned:
+  * a new eager action in these paths fails here instead of going
+  * unnoticed. */
+class JobBudgetSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+  private val sf = TestSpark.sf0001
+
+  /** `body`'s result and the call sites of the Spark jobs it launched
+    * from this thread. */
+  private def jobs[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val group = s"job-budget-${java.util.UUID.randomUUID()}"
+    val sites = new ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          sites.add(e.stageInfos.headOption.fold("?")(_.name))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, null)
+    try {
+      val out = body
+      TestListenerBus.drain(sc)
+      (out, sites.asScala.toSeq)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("Tables.t launches no job on any testdata table") {
+    val tables = new File(sf).listFiles().map(_.getName)
+      .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet")).sorted
+    assert(tables.length >= 10)
+    tables.foreach { t =>
+      val (df, sites) = jobs(Tables.t(spark, sf, t))
+      assert(df.columns.nonEmpty && sites.isEmpty, t)
+    }
+    assert(jobs(Tables.events(spark, sf))._2.isEmpty)
+  }
+
+  test("fetchAll launches no job before its DataFrame is used") {
+    val d = Files.createTempDirectory("graft-budget-pages").toString
+    Paginated.writeMockPages(spark, sf, d, pageSize = 50, totalRows = 200)
+    val (df, sites) = jobs(Paginated.fetchAll(spark, d))
+    assert(sites.isEmpty)
+    assert(df.count() === 200L)
+  }
+
+  // Measured: 9. The DQ gate, the merge count and the staging write each
+  // run their shuffle stages as separate jobs under AQE, and the audit
+  // append writes one. Page probes and parquet read-backs launch none.
+  private val dailyLoadBudget = 9
+
+  test(s"one successful daily load launches at most $dailyLoadBudget jobs") {
+    val d = Files.createTempDirectory("graft-budget-load").toString
+    Files.createDirectories(Paths.get(s"$d/pages"))
+    Seq(1 -> true, 2 -> false).foreach { case (p, hasNext) =>
+      val recs = (1 to 100).map { i =>
+        val id = (p - 1) * 100 + i
+        s"""{"event_id":$id,"user_id":${id % 17},"event_type":"t${id % 3}","value":$id.5}"""
+      }
+      Files.writeString(Paths.get(s"$d/pages/page_$p.json"),
+        s"""{"records":[${recs.mkString(",")}],"pagination":{"has_next":$hasNext}}""")
+    }
+    val target = spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      Paginated.recordSchema.add("load_timestamp", TimestampType)
+        .add("source_file", StringType))
+    val (out, sites) = jobs {
+      val raw = Paginated.fetchAll(spark, s"$d/pages")
+      val src = Meta.addMetadata(raw, clock = to_timestamp(lit("2026-01-01 06:00:00")))
+      val res = Pipeline.run(spark, src, target,
+        Quality.DqContract(Seq("event_id", "user_id", "event_type"),
+          Seq("user_id", "event_type")),
+        ts = col("load_timestamp"), tiebreak = Seq(col("event_id")),
+        tableName = "daily_events", auditPath = s"$d/audit",
+        clock = "2026-01-01 06:00:00", sourceFiles = Seq(s"$d/pages"))
+      assert(res.status === "SUCCESS")
+      Sinks.stagingOverwrite(res.merged, s"$d/staging")
+    }
+    info(s"daily load: ${sites.length} jobs: ${sites.mkString(", ")}")
+    assert(sites.length <= dailyLoadBudget)
+    assert(out.count() === 51L) // 17 users x 3 event types
+  }
+}

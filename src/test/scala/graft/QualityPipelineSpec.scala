@@ -111,4 +111,25 @@ class QualityPipelineSpec extends AnyFunSuite {
     // latest per key from source (id=11 wins for 'a'), target-only 'c' kept
     assert(rows === Set((11L, "a", 9L), (12L, "b", 1L), (1L, "c", 1L)))
   }
+
+  test("pipeline: audit log keeps every load's row (ref :219-242 appends)") {
+    val out = java.nio.file.Files.createTempDirectory("graft-audit4").toString
+    val contract = Quality.DqContract(Seq("id", "key"), Seq("key"), minRows = 1)
+    def load(source: org.apache.spark.sql.DataFrame, clock: String) =
+      Pipeline.run(spark, source, Seq((1L, "c", 1L)).toDF("id", "key", "v"),
+        contract, ts = col("v"), tiebreak = Seq(col("id")),
+        tableName = "t", auditPath = s"$out/audit", clock = clock)
+    val ok = load(Seq((10L, "a", 5L), (11L, "b", 9L)).toDF("id", "key", "v"),
+      "2026-01-01 06:00:00")
+    assert(ok.status === "SUCCESS")
+    val bad = load(Seq((12L, None, 1L), (13L, Some("d"), 2L)).toDF("id", "key", "v"),
+      "2026-01-02 06:00:00")
+    assert(bad.status === "FAILED")
+    val rows = bad.audit.orderBy("load_timestamp")
+      .select(col("status"), col("record_count"), col("load_timestamp").cast("string"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
+    assert(rows === Seq(
+      ("SUCCESS", 3L, "2026-01-01 06:00:00"),
+      ("FAILED: null_keys", 0L, "2026-01-02 06:00:00")))
+  }
 }

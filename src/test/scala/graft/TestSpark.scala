@@ -4,6 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites. */
 object TestSpark {
+  /** The sf0.001 testdata set (TESTDATA.md). */
+  val sf0001 = "/root/testdata/sf0.001"
+
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
