@@ -429,13 +429,26 @@ object TextDedup {
     // cross-doc collision adds 1; a within-doc collision shrinks one
     // set and can subtract 1) with probability ~|set|²/2⁶⁴ per pair
     // (≈1e-13 at 10³ shingles/doc) — the family's disclosed-bound
-    // trade, oracle-gated at all three SFs. `n` stays the STRING-
-    // distinct shingle count (counted before hashing), so the Jaccard
-    // denominator and the size-ratio prune are unchanged.
-    val sets = sh.join(candDocs, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), xxhash64(col("shingle")).as("shingle"))
-      .groupBy(col("doc_id"))
-      .agg(collect_set(col("shingle")).as("set"), count(lit(1)).as("n"))
+    // trade, oracle-gated at all three SFs.
+    decideJaccard(cand,
+      sh.join(candDocs, Seq("doc_id"), "left_semi")
+        .select(col("doc_id"), xxhash64(col("shingle")).as("h")),
+      threshold)
+  }
+
+  /** The exact Jaccard decision of candidate pairs (doc_a, doc_b) over
+    * hashed shingle rows (doc_id, h = xxhash64(shingle)), ONE row per
+    * string-distinct shingle of a doc: `n` counts those rows, so it stays
+    * the STRING-distinct shingle count (the Jaccard denominator and the
+    * size-ratio prune never see a hash collision), while the set and its
+    * intersection run on longs. Shared by [[verifyJaccard]] (after its
+    * candidate-doc semi-join) and [[nearDupJaccardChars]] (whose hashed
+    * table is already persisted for the funnel).
+    */
+  private[graft] def decideJaccard(cand: DataFrame, hashed: DataFrame,
+                                   threshold: Double): DataFrame = {
+    val sets = hashed.groupBy(col("doc_id"))
+      .agg(collect_set(col("h")).as("set"), count(lit(1)).as("n"))
     cand
       .join(sets.select(col("doc_id").as("doc_a"), col("set").as("set_a"),
         col("n").as("n_a")), "doc_a")
@@ -914,9 +927,16 @@ object TextDedup {
     *     for any pair sharing at least one rare shingle, covering the
     *     tail where LSH is weakest (pairs barely above threshold).
     *
-    * Both generators shuffle ids/signatures, never text; precision is
-    * 1.0 from the exact verify. Measured 256/256 recall vs the uncapped
-    * all-pairs oracle at sf0.1 (and exact at sf0.01).
+    * Both generators shuffle ids/signatures, never text. The shingles
+    * are exploded and hashed ONCE: the persisted (doc_id, h =
+    * xxhash64(shingle)) table feeds the MinHash domain by projection
+    * ([[charHashedShingles]]) and the exact decision ([[decideJaccard]])
+    * directly — the same sets and `n` [[verifyJaccard]] would build from
+    * a re-explode of the candidate docs, so precision is 1.0 under the
+    * family's disclosed xxhash64 bound, and no derived frame is widened
+    * (see [[Par.widen]]): building the op runs only the df-cap count.
+    * Measured 256/256 recall vs the uncapped all-pairs oracle at sf0.1
+    * (and exact at sf0.01).
     */
   def nearDupJaccardChars(docs: DataFrame, n: Int = 5,
                           threshold: Double = 0.5,
@@ -924,36 +944,14 @@ object TextDedup {
     val (bands, dfCap, margin) = charFunnelParams(threshold,
       if (maxDf > 0) 0L else docs.count())
     val cap = if (maxDf > 0) maxDf else dfCap
-    val hashed = charHashedShingles(docs, n)
-      .persist() // reused: signatures, rare index, int-set verify
+    val hashes = charShingleHashes(docs, n)
+      .persist() // reused: signatures, rare index, the decision
+    val hashed = charHashedShingles(hashes)
     val sigs = minhashSigs(hashed, charNumHashes, lshPrime)
       .persist() // reused: banding + the prefilter
-    val pre = charFusedCandidates(hashed, sigs, cap, bands, threshold, margin)
-    // persist, not localCheckpoint: an A/B'd localCheckpoint here
-    // (cutting the textual lineage the verify stage quintuple-prints)
-    // ran the whole op 1.7× SLOWER — the eager RDD materialization
-    // path forgoes the adaptive finalization the SQL path gets — so
-    // the explain-token inflation is accepted and documented in the
-    // fingerprint golden instead (runtime scans are cache-deduplicated;
-    // only the printed tree repeats the funnel subtree).
-    val nearExact = charHashedSetJaccard(pre, hashed, threshold)
-      .persist() // read 5×: survivor-doc list + verifyJaccard's joins
-
-    // Stage 3 — the exact STRING-set decision (precision 1.0, the
-    // oracle's arithmetic) touches only near-threshold survivors, and
-    // the string-shingle explode runs over SURVIVOR DOCS ONLY: the
-    // semi-join is applied to `docs` BEFORE charShingles, so the
-    // second corpus-wide explode the staged shape paid (verifyJaccard
-    // can only semi-join AFTER its `sh` input is exploded) never runs
-    // — at 100 TB, re-exploding every document to feed a 10⁻⁴-slice
-    // verify is the difference between a corpus pass and a near-dup-
-    // slice pass (round-11 A/B, BENCH_NOTES).
-    val survDocs = nearExact.select(col("doc_a").as("doc_id"))
-      .unionByName(nearExact.select(col("doc_b").as("doc_id")))
-      .distinct()
-    verifyJaccard(nearExact,
-      charShingles(docs.join(survDocs, Seq("doc_id"), "left_semi"), n),
-      threshold)
+    decideJaccard(
+      charFusedCandidates(hashed, sigs, cap, bands, threshold, margin),
+      hashes, threshold)
   }
 
   // The char funnel's stage builders are shared with the dev profiler
@@ -1014,10 +1012,17 @@ object TextDedup {
   def dfCapFor(corpusSize: Long): Int =
     math.min(1024L, math.max(100L, math.ceil(0.02 * corpusSize).toLong)).toInt
 
-  /** Char shingles hashed into the MinHash domain (doc_id, x). */
-  private[graft] def charHashedShingles(docs: DataFrame, n: Int): DataFrame =
-    charShingles(docs, n)
-      .select(col("doc_id"), pmod(xxhash64(col("shingle")), lit(lshPrime)).as("x"))
+  /** String-distinct char shingles as (doc_id, h = xxhash64(shingle)),
+    * one row per shingle: the input of [[decideJaccard]] and, through
+    * [[charHashedShingles]], of the MinHash funnel. */
+  private[graft] def charShingleHashes(docs: DataFrame, n: Int): DataFrame =
+    charShingles(docs, n).select(col("doc_id"), xxhash64(col("shingle")).as("h"))
+
+  /** The MinHash domain (doc_id, x = pmod(h, lshPrime)) of
+    * [[charShingleHashes]] rows — a projection, so a persisted hash
+    * table serves both the funnel and the decision. */
+  private[graft] def charHashedShingles(hashes: DataFrame): DataFrame =
+    hashes.select(col("doc_id"), pmod(col("h"), lit(lshPrime)).as("x"))
 
   /** Fused candidate generation + signature-agreement prefilter:
     * LSH banding ∪ rare-shingle inverted index, with the 64-int
@@ -1138,28 +1143,6 @@ object TextDedup {
       .filter(agrees(col("sig_a"), col("sig_b")))
       .select(col("doc_a"), col("doc_b"))
     lsh.unionByName(rare).distinct()
-  }
-
-  /** Stage 2 — exact Jaccard over the HASHED shingle sets (longs):
-    * ~4× lighter than string sets in both shuffle bytes and compare
-    * cost. xxhash64 into a 2³¹ domain perturbs a ~10²-element set's
-    * Jaccard only via collisions (P ≈ |set|²/2³² ≈ 1e-5 per pair), so
-    * a 0.04 safety margin passes every near-threshold pair onward.
-    */
-  private[graft] def charHashedSetJaccard(pre: DataFrame, hashed: DataFrame,
-                                          threshold: Double): DataFrame = {
-    val iSets = hashed.groupBy(col("doc_id"))
-      .agg(collect_set(col("x")).as("iset"))
-      .select(col("doc_id"), col("iset"), size(col("iset")).as("ni"))
-    pre
-      .join(iSets.select(col("doc_id").as("doc_a"), col("iset").as("ia"),
-        col("ni").as("na")), "doc_a")
-      .join(iSets.select(col("doc_id").as("doc_b"), col("iset").as("ib"),
-        col("ni").as("nb")), "doc_b")
-      .withColumn("ii", size(array_intersect(col("ia"), col("ib"))))
-      .filter(col("ii").cast("double") / (col("na") + col("nb") - col("ii"))
-        >= threshold - 0.04)
-      .select(col("doc_a"), col("doc_b"))
   }
 
   /** MinHash signature matrix + LSH banding candidates — the sub-quadratic

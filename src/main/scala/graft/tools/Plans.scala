@@ -17,7 +17,7 @@ object Plans {
     "asof_join_native" -> "custom AsOfJoin exec: key exchange + in-partition sort-merge",
     "embedding_near_dup" -> "LSH bucket self-join; broadcast vector verify; no cartesian",
     "simhash_pairs" -> "signature-carrying bucket self-join; xor verify in-task",
-    "near_dedup_chars" -> "fused funnel: band self-join carrying int signatures (agreement filter runs before any pair shuffle) ∪ sig-filtered rare-shingle candidates → hashed-set Jaccard → exact string verify over survivor docs only (no second corpus explode)",
+    "near_dedup_chars" -> "fused funnel: band self-join carrying int signatures (agreement filter runs before any pair shuffle) ∪ sig-filtered rare-shingle candidates → one exact Jaccard decision on the persisted xxhash64 shingle rows (no re-explode, no construction-time jobs beyond the df-cap count)",
     "near_dedup_incremental" -> "batch × corpus bucket equi-join; never corpus²",
     "pack_sequences" -> "one shuffle to shards; per-shard window cumsum; DIV binning",
     "split_leak_pairs" -> "near-dup pairs + pure-projection split labels (no extra join)",

@@ -1,19 +1,17 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 import graft.ops.TextDedup
 
 /** Dev profiler for the char near-dedup funnel (`near_dedup_chars`) —
-  * the heaviest bench query. Times each funnel stage independently so a
-  * regression (or an optimization) can be attributed to fused candidate
-  * generation (LSH + rare index + in-bucket signature prefilter),
-  * hashed-set verify, or the exact string decision. Calls the op's OWN
-  * stage builders
-  * (TextDedup.charFusedCandidates/charHashedSetJaccard), so tuning the
-  * op can never leave this tool measuring a different pipeline. Not
-  * part of the driver contract.
+  * the heaviest bench query. Times each stage the op runs independently
+  * so a regression (or an optimization) can be attributed to shingle
+  * hashing, fused candidate generation (LSH + rare index + in-bucket
+  * signature prefilter), or the exact decision. Calls the op's OWN
+  * stage builders (TextDedup.charFusedCandidates/decideJaccard), so
+  * tuning the op can never leave this tool measuring a different
+  * pipeline. Not part of the driver contract.
   * Usage: runMain graft.tools.ProfChars [sfDir]
   */
 object ProfChars {
@@ -44,8 +42,9 @@ object ProfChars {
     val n = 5
     val threshold = 0.5
     val maxDf = 100
-    val hashed = TextDedup.charHashedShingles(docs, n).persist()
-    time("hashed shingles persist")(hashed.count())
+    val hashes = TextDedup.charShingleHashes(docs, n).persist()
+    time("hashed shingles persist")(hashes.count())
+    val hashed = TextDedup.charHashedShingles(hashes)
     val sigs = TextDedup
       .minhashSigs(hashed, TextDedup.charNumHashes, TextDedup.lshPrime)
       .persist()
@@ -55,20 +54,10 @@ object ProfChars {
     val pre = TextDedup.charFusedCandidates(hashed, sigs, maxDf,
       threshold = threshold).persist()
     time("fused cand+sig-prefilter")(pre.count())
-    val nearExact = TextDedup.charHashedSetJaccard(pre, hashed, threshold)
-      .persist()
-    time("stage2 hashed-set jaccard")(nearExact.count())
-    val survDocs = nearExact.select(col("doc_a").as("doc_id"))
-      .unionByName(nearExact.select(col("doc_b").as("doc_id")))
-      .distinct()
-    time("stage3 exact strings")(
-      TextDedup.verifyJaccard(nearExact,
-        TextDedup.charShingles(
-          docs.join(survDocs, Seq("doc_id"), "left_semi"), n),
-        threshold).count())
+    time("exact decision")(
+      TextDedup.decideJaccard(pre, hashes, threshold).count())
 
-    hashed.unpersist(); sigs.unpersist()
-    pre.unpersist(); nearExact.unpersist()
+    hashes.unpersist(); sigs.unpersist(); pre.unpersist()
 
     time("FULL near_dedup_chars")(
       TextDedup.nearDupJaccardChars(docs).count())

@@ -15,7 +15,7 @@ import graft.ops.TextDedup
   * predicate, which holds only while the fused path applies the SAME
   * predicate with the SAME minAgree to BOTH generators. A future edit
   * that, say, drops the prefilter on the rare path (an attractive
-  * "optimization" — it only ADDS stage-2 work, the final output is
+  * "optimization" — it only ADDS decision work, the final output is
   * unchanged) would silently break the documented equivalence; this
   * spec makes that a red test instead of a stale scaladoc.
   *
@@ -23,6 +23,13 @@ import graft.ops.TextDedup
   * building blocks (bucketPairs, bandsOf, pairIntersections) — the
   * exact round-10 composition, kept in the test so the op code carries
   * no dead path.
+  *
+  * The same discipline pins the op's single exact decision
+  * ([[TextDedup.decideJaccard]] on the funnel's own hashed rows)
+  * against the three-stage composition it replaced — a 31-bit hashed-set
+  * Jaccard with a 0.04 margin, then the survivor docs re-exploded from
+  * the text and decided by [[TextDedup.verifyJaccard]] — rebuilt here
+  * as the reference.
   */
 class CharFunnelEquivalenceSpec extends AnyFunSuite {
 
@@ -58,7 +65,8 @@ class CharFunnelEquivalenceSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     val (bands, cap, margin) =
       TextDedup.charFunnelParams(threshold, docs.count())
-    val hashed = TextDedup.charHashedShingles(docs, n).persist()
+    val hashed = TextDedup.charHashedShingles(
+      TextDedup.charShingleHashes(docs, n)).persist()
     val sigs = TextDedup.minhashSigs(hashed, TextDedup.charNumHashes,
       TextDedup.lshPrime).persist()
     try {
@@ -86,7 +94,8 @@ class CharFunnelEquivalenceSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     val (bands, cap, margin) =
       TextDedup.charFunnelParams(threshold, docs.count())
-    val hashed = TextDedup.charHashedShingles(docs, n).persist()
+    val hashed = TextDedup.charHashedShingles(
+      TextDedup.charShingleHashes(docs, n)).persist()
     val sigs = TextDedup.minhashSigs(hashed, TextDedup.charNumHashes,
       TextDedup.lshPrime).persist()
     val prev = sys.props.get("graft.char.lsh")
@@ -107,6 +116,96 @@ class CharFunnelEquivalenceSpec extends AnyFunSuite {
         case None => sys.props -= "graft.char.lsh"
       }
       hashed.unpersist(); sigs.unpersist()
+    }
+  }
+
+  /** The pre-single-decision shape of nearDupJaccardChars after its
+    * candidate stage: the 31-bit set Jaccard with a 0.04 margin, then
+    * the exact decision on the survivors' re-exploded strings. */
+  private def threeStageDecision(docs: DataFrame, pre: DataFrame,
+                                 hashed: DataFrame): DataFrame = {
+    val iSets = hashed.groupBy(col("doc_id"))
+      .agg(collect_set(col("x")).as("iset"))
+      .select(col("doc_id"), col("iset"), size(col("iset")).as("ni"))
+    val nearExact = pre
+      .join(iSets.select(col("doc_id").as("doc_a"), col("iset").as("ia"),
+        col("ni").as("na")), "doc_a")
+      .join(iSets.select(col("doc_id").as("doc_b"), col("iset").as("ib"),
+        col("ni").as("nb")), "doc_b")
+      .withColumn("ii", size(array_intersect(col("ia"), col("ib"))))
+      .filter(col("ii").cast("double") / (col("na") + col("nb") - col("ii"))
+        >= threshold - 0.04)
+      .select(col("doc_a"), col("doc_b"))
+    val survDocs = nearExact.select(col("doc_a").as("doc_id"))
+      .unionByName(nearExact.select(col("doc_b").as("doc_id")))
+      .distinct()
+    TextDedup.verifyJaccard(nearExact,
+      TextDedup.charShingles(docs.join(survDocs, Seq("doc_id"), "left_semi"), n),
+      threshold)
+  }
+
+  /** Pairs of docs over all-distinct characters (so every 5-gram is
+    * distinct): A = P·Q, B = P·R with |Q| = |R| = q share the |P| − 4
+    * grams inside P, so J = (p − 4)/(p + 2q − 4), exactly 1/2 at
+    * p = 2q + 4. Each q gives three pairs: p − 1 (J just below 0.5),
+    * p (J = 0.5) and p + 1 (just above). Families never share a char.
+    * Returns the docs and the pairs expected at threshold 0.5. */
+  private def thresholdFamily(): (DataFrame, Set[(Long, Long)]) = {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    var next = 0x4E00
+    def run(len: Int): String = {
+      val s = (next until next + len).map(_.toChar).mkString
+      next += len
+      s
+    }
+    val rows = for {
+      (q, f) <- Seq(20, 30).zipWithIndex
+      (dp, g) <- Seq(-1, 0, 1).zipWithIndex
+    } yield {
+      val p = run(2 * q + 4 + dp)
+      val id = 100L * f + 10L * g
+      (dp, Seq((id + 1, p + run(q)), (id + 2, p + run(q))))
+    }
+    val docs = rows.flatMap(_._2).toDF("doc_id", "text")
+    val expected = rows.collect { case (dp, Seq((a, _), (b, _))) if dp >= 0 => (a, b) }
+    (docs, expected.toSet)
+  }
+
+  private def jaccards(df: DataFrame): Map[(Long, Long), Long] =
+    df.select(col("doc_a"), col("doc_b"), col("jaccard")).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) ->
+        java.lang.Double.doubleToLongBits(r.getDouble(2))).toMap
+
+  test("single exact decision == the three-stage decision it replaced " +
+       "(sf0.001 + J = 0.5 ± 1 gram family; maxDf 100 and uncapped)") {
+    val spark = TestSpark.spark
+    val (family, familyPairs) = thresholdFamily()
+    val fixtures = Seq(
+      "sf0.001" -> Tables.documents(spark, dir).select(col("doc_id"), col("text")),
+      "family" -> family)
+    for ((name, docs) <- fixtures; maxDf <- Seq(100, 1000000)) {
+      spark.catalog.clearCache()
+      val (bands, _, margin) = TextDedup.charFunnelParams(threshold, 0L)
+      val hashed = TextDedup.charHashedShingles(
+        TextDedup.charShingleHashes(docs, n)).persist()
+      val sigs = TextDedup.minhashSigs(hashed, TextDedup.charNumHashes,
+        TextDedup.lshPrime).persist()
+      try {
+        val pre = TextDedup
+          .charFusedCandidates(hashed, sigs, maxDf, bands, threshold, margin)
+          .persist()
+        val old = jaccards(threeStageDecision(docs, pre, hashed))
+        val now = jaccards(TextDedup.nearDupJaccardChars(docs, n, threshold, maxDf))
+        val at = s"$name, maxDf $maxDf"
+        assert(old.nonEmpty, s"degenerate: no pair ($at)")
+        assert(old.keySet.subsetOf(now.keySet),
+          s"pairs lost by the single decision ($at): ${old.keySet -- now.keySet}")
+        assert(now === old, s"outputs differ ($at): " +
+          s"only-new ${now.keySet -- old.keySet}, jaccard bits differ on " +
+          s"${old.keySet.filter(k => now.get(k) != old.get(k)).take(5)}")
+        if (name == "family") assert(now.keySet === familyPairs, at)
+      } finally { spark.catalog.clearCache() }
     }
   }
 }

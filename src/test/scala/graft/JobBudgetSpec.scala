@@ -16,9 +16,9 @@ import graft.ops.{Meta, Quality}
 import graft.runner.Pipeline
 import graft.sources.{Paginated, Sinks}
 
-/** Spark jobs launched by construction and by the daily load, pinned:
-  * a new eager action in these paths fails here instead of going
-  * unnoticed. */
+/** Spark jobs launched by construction, by the daily load and by the
+  * char near-dedup query, pinned: a new eager action in these paths
+  * fails here instead of going unnoticed. */
 class JobBudgetSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf0001
@@ -100,5 +100,24 @@ class JobBudgetSpec extends AnyFunSuite {
     info(s"daily load: ${sites.length} jobs: ${sites.mkString(", ")}")
     assert(sites.length <= dailyLoadBudget)
     assert(out.count() === 51L) // 17 users x 3 event types
+  }
+
+  // Measured: 20 for the whole query (build + collect) on a cleared
+  // cache. The build itself runs only the docs.count() that sizes the df
+  // cap (its scan and its final aggregate, 2 jobs under AQE).
+  private val nearDupBuildBudget = 2
+  private val nearDupBudget = 20
+
+  test(s"near_dedup_chars: building launches at most $nearDupBuildBudget " +
+       s"jobs, the whole query at most $nearDupBudget") {
+    spark.catalog.clearCache()
+    val (df, build) = jobs(SparkEntry.queries("near_dedup_chars")(spark, sf))
+    val (rows, run) = jobs(df.collect())
+    info(s"near_dedup_chars: ${build.length} build jobs (${build.mkString(", ")}), " +
+      s"${run.length} run jobs")
+    assert(build.length <= nearDupBuildBudget)
+    assert(build.length + run.length <= nearDupBudget)
+    assert(rows.nonEmpty)
+    spark.catalog.clearCache()
   }
 }

@@ -139,7 +139,8 @@ class PlanShapeSpec extends AnyFunSuite {
         concat(lit("unique filler payload number "),
           col("id").cast("string"), lit(" tail "),
           (col("id") * 7).cast("string"))).as("text"))
-    val hashed = TextDedup.charHashedShingles(docs, 5).persist()
+    val hashed = TextDedup.charHashedShingles(
+      TextDedup.charShingleHashes(docs, 5)).persist()
     val sigs = TextDedup.minhashSigs(hashed, TextDedup.charNumHashes,
       TextDedup.lshPrime).persist()
     try {
