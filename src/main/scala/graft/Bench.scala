@@ -14,19 +14,6 @@ object Bench {
       .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Streaming state-store A/B knob (optimization round 16, VERDICT
-    // r15 item 5): SPARK_GRAFT_STATE_STORE=rocksdb switches every
-    // streaming query's state store to RocksDB; unset keeps Spark's
-    // default (HDFS-backed in-memory) provider, so the driver's bench
-    // is unaffected. Output-identical either way (the state store is a
-    // physical choice); measured A/B in BENCH_NOTES. The conf is
-    // per-query dynamic; every streaming query runs on THIS session
-    // (the newSession children are batch graph/loop ops with no state
-    // store), so one session-level set covers the streaming family.
-    if (sys.env.get("SPARK_GRAFT_STATE_STORE").contains("rocksdb"))
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
     // local iteration aid, mirrors Verify: SPARK_GRAFT_ONLY=q1,q2
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
@@ -42,19 +29,16 @@ object Bench {
     // web_pipeline's cleaning folds prune to a bare scan. The noop
     // write consumes every output row and column, so the timed window
     // covers the operator's actual work while writing nothing.
-    // SPARK_GRAFT_BENCH_ACTION=count restores the legacy action for
-    // same-HEAD A/B comparisons against pre-r15 snapshots.
-    val legacyCount = sys.env.get("SPARK_GRAFT_BENCH_ACTION").contains("count")
     def once(): (Map[String, Double], List[String]) = {
       var failed = List.empty[String]
       val times = selected.map { case (name, fn) =>
         val t0 = System.nanoTime()
-        try {
-          val df = fn(spark, sfDir)
-          if (legacyCount) df.count()
-          else df.write.format("noop").mode("overwrite").save()
+        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        catch { case e: Throwable =>
+          System.err.println(
+            s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+          failed ::= name
         }
-        catch { case _: Throwable => failed ::= name }
         val dt = (System.nanoTime() - t0) / 1e9
         // operator-internal persists (shingle sets, signatures, k-means
         // corpus) are scoped to one query — drop them so queries time
@@ -88,7 +72,7 @@ object Bench {
     // surface it in the output instead of waiting for a human diff.
     // Parsing is a line-local regex over our own single-line format;
     // only runs comparing against the same SF dir.
-    val action = if (legacyCount) "count" else "noop_write"
+    val action = "noop_write"
     val prevWarm: Map[String, Double] =
       try {
         val prev = Files.readString(Paths.get("/root/repo/target/bench.json"))

@@ -365,59 +365,14 @@ object Text {
     * mass) over a word array — shared by [[gopherRepetition]] and the
     * fused web front door's repetition verdict.
     *
-    * Round-16 measured NEGATIVE, kept re-runnable behind
-    * `-Dgraft.gopher.grams=hash`: replacing the joined gram string
-    * with an in-row xxhash64-fold identity (hash + char length — the
-    * §2.3 trick that paid in the shuffle-bound stages) is SLOWER here:
-    * interleaved A/B (tools.ProfPlan, sf0.1 web_substr staging, warm):
-    * gopherPass-only projection 1.70 s (string) vs 2.63 s (hash) —
-    * this fold is compute-bound per row, not shuffle-bound, and the
-    * per-position HOF hash fold (n interpreted xxhash64 nodes per
-    * window) costs more than ONE native array_join + string sort.
-    * Output rows are identical up to ~(grams/doc)²/2⁶⁴ hash merges
-    * (both variants oracle-gated).
+    * The grams are joined strings, sorted natively, then folded in one
+    * pass. This fold is compute-bound per row, not shuffle-bound: an
+    * in-row xxhash64 gram identity (n interpreted hash nodes per window)
+    * measured slower than one native `array_join` + string sort (sf0.1
+    * web_substr staging, warm: 1.70 s string vs 2.63 s hash; BENCH_NOTES
+    * round 16, Gopher n-gram hash fold).
     */
-  private def gramStats(w: Column, n: Int): Column =
-    if (sys.props.getOrElse("graft.gopher.grams", "string") == "string")
-      gramStatsString(w, n)
-    else {
-      // per-word hash/length arrays; the per-n slices fold over these
-      val hw = transform(w, x => xxhash64(x))
-      val wl = transform(w, x => length(x).cast("long"))
-      val grams = array_sort(transform(
-        sequence(lit(0), size(w) - lit(n)),
-        i => struct(
-          // xxhash64(acc, h) as the combiner: well-mixed and, unlike a
-          // multiply-add fold, free of ANSI long-overflow throws
-          aggregate(slice(hw, i + 1, lit(n)), lit(0L),
-            (acc, h) => xxhash64(acc, h)).as("h"),
-          (aggregate(slice(wl, i + 1, lit(n)), lit(0L),
-            (acc, l) => acc + l) + lit(n - 1).cast("long")).as("l"))))
-      val empty = array().cast("array<struct<h:bigint,l:bigint>>")
-      aggregate(
-        when(size(w) >= n, grams).otherwise(empty),
-        struct(lit(Long.MinValue).as("prev"), lit(0L).as("run"),
-          lit(0L).as("top"), lit(0L).as("dup")),
-        (acc, x) => {
-          val len = x.getField("l")
-          val run = when(x.getField("h") === acc.getField("prev"),
-            acc.getField("run") + lit(1L)).otherwise(lit(1L))
-          val contrib = when(run === 2, lit(2L) * len)
-            .when(run > 2, len)
-            .otherwise(lit(0L))
-          struct(x.getField("h").as("prev"), run.as("run"),
-            greatest(acc.getField("top"), run * len).as("top"),
-            (acc.getField("dup") + contrib).as("dup"))
-        },
-        acc => struct(acc.getField("top").as("top"),
-          acc.getField("dup").as("dup")))
-    }
-
-  /** The SHIPPED string-gram shape of [[gramStats]] (the round-16 A/B
-    * measured it faster than the hashed variant — see the dispatch
-    * scaladoc above).
-    */
-  private def gramStatsString(w: Column, n: Int): Column = {
+  private def gramStats(w: Column, n: Int): Column = {
     val grams = array_sort(transform(
       sequence(lit(0), size(w) - lit(n)),
       i => array_join(slice(w, i + 1, lit(n)), " ")))

@@ -370,7 +370,7 @@ object TextDedup {
     * pure expression, stays columnar: flatten(i -> (ds[i], each later)).
     * Shared with [[Similarity.cosineNearDup]]'s LSH bucket expansion.
     */
-  private[ops] def pairsOf(ds: Column): Column =
+  private[graft] def pairsOf(ds: Column): Column =
     flatten(transform(sequence(lit(0), size(ds) - 2), i =>
       transform(slice(ds, i + 2, size(ds)),
         y => struct(element_at(ds, i + 1).as("a"), y.as("b")))))
@@ -1046,12 +1046,12 @@ object TextDedup {
     * sf0.1), then joined signatures back onto the deduplicated pairs.
     * Here the int-cast signature rides the band row (8·numHashes/4 =
     * 256 B/doc/band), band keys and signature come from the SAME row
-    * (no join), and the agreement filter runs on the pair explode's
-    * output INSIDE the bucket aggregation's partitions — the
-    * downstream distinct sees only agreeing pairs (651K vs 8.0M at
-    * sf0.1, a 12× exchange-row cut; warm 12.3 → 7.4 s, hash-identical
-    * output). The earlier measurement that rejected sig-joins on the
-    * raw band-hit stream still holds — this is NOT that shape: no join
+    * (no join), and the agreement filter runs on the band self-join's
+    * output in the join's own stage — the downstream distinct sees
+    * only agreeing pairs (651K vs 8.0M at sf0.1, a 12× exchange-row
+    * cut; warm 12.3 → 7.4 s, hash-identical output). The earlier
+    * measurement that rejected sig-joins on the raw band-hit stream
+    * still holds — this is NOT that shape: no join
     * materializes per-hit signature arrays; the signature is carried
     * once per (doc, band) into the bucket shuffle, which is
     * band-count-bounded (32/doc) where raw pair hits are
@@ -1060,25 +1060,13 @@ object TextDedup {
     * — posting-capped — so the join cost is negligible), keeping the
     * admitted pair set exactly equal to the staged funnel's
     * (filter∘distinct∘union = distinct∘union∘filter for a per-pair
-    * predicate). Skew note (corrected r12 — the round-11 scaladoc
-    * wrongly claimed the [[bucketPairs]] fanout repartition "is kept";
-    * the fused self-join never had it): giant-template-bucket skew is
-    * handled DIFFERENTLY here, and better. The LSH generator is a plain
-    * shuffle self-join on (band, key), which is exactly the shape AQE's
-    * OptimizeSkewedJoin (on by default) can split at runtime — a
-    * skewed join partition is divided into sub-splits with the matching
-    * other side duplicated, so even a SINGLE giant key fans out across
-    * tasks. The bucketPairs fanout repartition only separates DISTINCT
-    * giant keys into different tasks (a lone giant still lands whole in
-    * one task), and a groupBy-collect shape cannot be split at all
-    * (aggregation must see every row of its key). Measured (interleaved
-    * one-JVM A/B/C at sf0.1, tools.AbChar, BENCH_NOTES r12): shipped
-    * self-join 10.3 s; self-join over 8×-fanout-repartitioned band rows
-    * 2.0× slower (the extra full shuffle of ~270 B rows × 2 sides costs
-    * far more than the skew it spreads); bucketPairs-style groupBy
-    * carrying (doc_id, sigi) structs 3.5× slower (object-hash
-    * collect_list + struct-array explode). Identical 256-row output all
-    * three arms.
+    * predicate). Skew: the LSH generator is a plain shuffle self-join
+    * on (band, key), the one shape AQE's OptimizeSkewedJoin (on by
+    * default) can split at runtime, so even a SINGLE giant template
+    * bucket fans out across tasks. It measured fastest against a
+    * fanout-repartitioned self-join (2.0× slower) and a groupBy-collect
+    * of (doc_id, sigi) structs (3.5× slower), identical 256-row output
+    * (sf0.1; BENCH_NOTES round 12, char-funnel LSH skew-mitigation).
     */
   private[graft] def charFusedCandidates(hashed: DataFrame, sigs: DataFrame,
                                          maxDf: Int, bands: Int = 32,
@@ -1091,51 +1079,19 @@ object TextDedup {
         (x, y) => when(x === y, lit(1))), e => e.isNotNull)) >= minAgree
     val sigInts = sigs.select(col("doc_id"), col("sig"),
       transform(col("sig"), v => v.cast("int")).as("sigi"))
-    val fanout =
-      sigs.sparkSession.sessionState.conf.numShufflePartitions * 8
     val bandRows = sigInts
       .select(col("doc_id"), col("sigi"),
         explode(bandKeyArray(charNumHashes, bands)).as("bk"))
       .select(col("doc_id"), col("sigi"), col("bk.band"), col("bk.key"))
-    // A/B toggle for the skew-mitigation measurement (BENCH_NOTES r12):
-    // "join" (shipped) = plain band self-join; "join_repart" = self-join
-    // over pre-repartitioned band rows (2.0× slower, interleaved A/B);
-    // "group" = bucketPairs-style groupBy carrying sig structs (3.5×
-    // slower). Kept re-runnable via tools.AbChar.
-    val variant = sys.props.getOrElse("graft.char.lsh", "join")
-    val lsh = variant match {
-      case "join" =>
-        bandRows
-          .select(col("band"), col("key"), col("doc_id").as("doc_a"),
-            col("sigi").as("sig_a"))
-          .join(bandRows.select(col("band"), col("key"),
-            col("doc_id").as("doc_b"), col("sigi").as("sig_b")),
-            Seq("band", "key"))
-          .filter(col("doc_a") < col("doc_b"))
-          .filter(agrees(col("sig_a"), col("sig_b")))
-          .select(col("doc_a"), col("doc_b"))
-      case "join_repart" =>
-        val rp = bandRows.repartition(fanout, col("band"), col("key"))
-        rp.select(col("band"), col("key"), col("doc_id").as("doc_a"),
-            col("sigi").as("sig_a"))
-          .join(rp.select(col("band"), col("key"),
-            col("doc_id").as("doc_b"), col("sigi").as("sig_b")),
-            Seq("band", "key"))
-          .filter(col("doc_a") < col("doc_b"))
-          .filter(agrees(col("sig_a"), col("sig_b")))
-          .select(col("doc_a"), col("doc_b"))
-      case _ =>
-        bandRows
-          .repartition(fanout, col("band"), col("key"))
-          .groupBy(col("band"), col("key"))
-          .agg(sort_array(collect_list(struct(col("doc_id"), col("sigi"))))
-            .as("ds"))
-          .filter(size(col("ds")) >= 2)
-          .select(explode(pairsOf(col("ds"))).as("p"))
-          .filter(agrees(col("p.a.sigi"), col("p.b.sigi")))
-          .select(col("p.a.doc_id").as("doc_a"),
-            col("p.b.doc_id").as("doc_b"))
-    }
+    val lsh = bandRows
+      .select(col("band"), col("key"), col("doc_id").as("doc_a"),
+        col("sigi").as("sig_a"))
+      .join(bandRows.select(col("band"), col("key"),
+        col("doc_id").as("doc_b"), col("sigi").as("sig_b")),
+        Seq("band", "key"))
+      .filter(col("doc_a") < col("doc_b"))
+      .filter(agrees(col("sig_a"), col("sig_b")))
+      .select(col("doc_a"), col("doc_b"))
     val rare = pairIntersections(hashed.withColumnRenamed("x", "shingle"), maxDf)
       .select(col("doc_a"), col("doc_b"))
       .join(sigInts.select(col("doc_id").as("doc_a"), col("sigi").as("sig_a")), "doc_a")
@@ -1145,16 +1101,6 @@ object TextDedup {
     lsh.unionByName(rare).distinct()
   }
 
-  /** MinHash signature matrix + LSH banding candidates — the sub-quadratic
-    * near-dedup path. `numHashes` universal hashes h_i(x) = (a_i·x + b_i)
-    * mod p over a polynomial shingle hash; signatures banded into
-    * `bands` groups whose concatenated values form LSH bucket keys; docs
-    * sharing any bucket are candidates, then verified with exact Jaccard.
-    *
-    * Everything is built-in higher-order functions (one explode + two
-    * shuffles), no UDFs; signatures are 8·numHashes bytes per doc, so the
-    * banding shuffle moves signatures, not text.
-    */
   private[graft] val lshPrime = 2038074743L // prime > any 32-bit shingle hash
 
   /** Polynomial word-shingle hash → non-negative int domain (shared by
@@ -1165,49 +1111,29 @@ object TextDedup {
     transform(split(col("shingle"), " "), w => ascii(w) * lit(31L) + length(w)),
     lit(0L), (acc, x) => (acc * lit(1000003L) + x) % lit(lshPrime))
 
+  /** MinHash signature matrix + LSH banding candidates — the sub-quadratic
+    * near-dedup path. `numHashes` universal hashes h_i(x) = (a_i·x + b_i)
+    * mod p over a polynomial shingle hash; signatures banded into
+    * `bands` groups whose concatenated values form LSH bucket keys; docs
+    * sharing any bucket are candidates, then verified with exact Jaccard.
+    *
+    * Everything is built-in higher-order functions (one explode + two
+    * shuffles), no UDFs; signatures are 8·numHashes bytes per doc, so the
+    * banding shuffle moves signatures, not text. The shingle explode +
+    * signature aggregate ships over computing the banding in-row with
+    * [[streamingBandsFor]]: that per-row 64-hash fold costs more than
+    * the signature exchange it saves (910-doc web_near kept slice: 3.11
+    * vs 2.13 s mean, identical 69 pairs; BENCH_NOTES round 16, word-path
+    * LSH candidate shape).
+    */
   def minhashLshPairs(docs: DataFrame, k: Int = 3, numHashes: Int = 32,
                       bands: Int = 8, threshold: Double = 0.5): DataFrame = {
-    // A/B toggle (tools.AbWord, round 16): "explode" (SHIPPED — the
-    // pre-r16 shape: shingle explode + MinHashAgg signature groupBy)
-    // vs "fold", a measured NEGATIVE: computing banding in-row via
-    // [[streamingBandsFor]] (same seed-42 family/packing, asserted
-    // bucket-compatible) removes the shingle explode and the signature
-    // exchange from the plan, but the per-row 64-hash HOF fold costs
-    // MORE than the shuffle it saves — interleaved A/B at sf0.1
-    // (910-doc kept slice, 3 reps): fold 3.11 s mean vs explode+join
-    // 2.13 s, identical 69 output pairs. Kept re-runnable for larger
-    // corpora where the shuffle side of the trade grows.
-    if (sys.props.getOrElse("graft.word.minhash", "explode") == "explode") {
-      val sh = shingles(docs, k).persist() // reused: signatures + verify
-      val candidates = lshCandidates(
-        sh.select(col("doc_id"), wordShingleHash.as("x")),
-        numHashes, bands, lshPrime)
-      // exact-Jaccard verification of candidates (precision = 1.0)
-      verifyJaccard(candidates, sh, threshold)
-    } else {
-      val buckets = Par.widen(docs)
-        .select(col("doc_id"),
-          explode(streamingBandsFor(col("text"), k, numHashes, bands))
-            .as("bk"))
-        .select(col("doc_id"), col("bk.band"), col("bk.key"))
-      val candidates = buckets
-        .select(col("band"), col("key"), col("doc_id").as("doc_a"))
-        .join(buckets.select(col("band"), col("key"),
-          col("doc_id").as("doc_b")), Seq("band", "key"))
-        .filter(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b"))
-        .distinct()
-        .persist() // read by the doc list and the verify joins
-      val candDocs = candidates.select(col("doc_a").as("doc_id"))
-        .unionByName(candidates.select(col("doc_b").as("doc_id")))
-        .distinct()
-      // shingle ONLY candidate docs: the semi-join runs BEFORE the
-      // explode, so the verify pass re-parses the near-dup slice, not
-      // the corpus (the char funnel's round-11 discipline)
-      verifyJaccard(candidates,
-        shingles(docs.join(candDocs, Seq("doc_id"), "left_semi"), k),
-        threshold)
-    }
+    val sh = shingles(docs, k).persist() // reused: signatures + verify
+    val candidates = lshCandidates(
+      sh.select(col("doc_id"), wordShingleHash.as("x")),
+      numHashes, bands, lshPrime)
+    // exact-Jaccard verification of candidates (precision = 1.0)
+    verifyJaccard(candidates, sh, threshold)
   }
 
   /** LSH banding candidate pairs from pre-hashed shingles (doc_id, x):
@@ -1216,62 +1142,23 @@ object TextDedup {
     * columns; deterministic seed ⇒ stable signatures across runs and
     * partitionings), then banding — bucket key = band index + packed
     * signature slice — then candidate pairs from a plain (band, key)
-    * SELF-JOIN of the bucket table (optimization round 16): the same
-    * shape the char funnel's round-12 A/B measured fastest. The
-    * previous [[bucketPairs]] shape forced a cpus×8 fanout repartition
-    * (one extra full exchange, and a fixed task count that is pure
-    * scheduling overhead when the band table is small) plus a
-    * collect_list aggregation that AQE cannot skew-split; the
-    * self-join emits the identical pair multiset — every unordered
-    * in-bucket pair once per shared bucket, deduplicated by the same
-    * `distinct()` — while AQE sizes the join's partitions to the data
-    * and splits a giant bucket's key at runtime (OptimizeSkewedJoin),
-    * which the groupBy-collect shape structurally cannot. Measured
-    * (ProfPlan, sf0.1 web_substr kept slice, 882 docs): candidate
-    * stage 2.62 → ~0.9 s warm; identical rows (oracle-gated).
-    * Shared by the word-shingle near-dedup path; the shuffles carry
-    * (band, key, id) rows only, never text.
+    * SELF-JOIN of the bucket table: AQE sizes the join's partitions to
+    * the data and splits a giant bucket's key at runtime
+    * (OptimizeSkewedJoin). It measured faster than a fanout-repartitioned
+    * groupBy-collect of the buckets, with identical rows (web_near kept
+    * slice, 910 docs: 2.19 vs 2.75 s; BENCH_NOTES round 16, word-path
+    * LSH candidate shape). Shared by the word-shingle near-dedup path;
+    * the shuffles carry (band, key, id) rows only, never text.
     */
   private[graft] def lshCandidates(hashed: DataFrame, numHashes: Int, bands: Int,
                             p: Long): DataFrame = {
-    // A/B toggle for the interleaved measurement (tools.AbWord, round
-    // 16): "join" (shipped) = band self-join; "group" = the pre-r16
-    // bucketPairs groupBy-collect shape. Identical output rows.
-    if (sys.props.getOrElse("graft.word.lsh", "join") == "group")
-      bucketPairs(minhashBuckets(hashed, numHashes, bands, p)).distinct()
-    else {
-      val buckets = minhashBuckets(hashed, numHashes, bands, p)
-      buckets.select(col("band"), col("key"), col("doc_id").as("doc_a"))
-        .join(buckets.select(col("band"), col("key"), col("doc_id").as("doc_b")),
-          Seq("band", "key"))
-        .filter(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b"))
-        .distinct()
-    }
-  }
-
-  /** Bucket table (doc_id, band, key) → candidate pairs (doc_a < doc_b),
-    * NOT deduplicated across buckets. */
-  private[graft] def bucketPairs(buckets: DataFrame): DataFrame = {
-    // The pair explosion runs INSIDE the aggregation's partitions, and
-    // its output is up to C(bucket,2)-fold larger than its input — on
-    // template corpora a handful of giant buckets dominate, so the
-    // stage's tail is whichever partition their keys hash into
-    // (measured: a band-key representation change moved the char
-    // funnel ±25% at 32 partitions purely by re-rolling that placement,
-    // BENCH_NOTES round-8 session 6). Pre-partitioning by the grouping
-    // key at 8× the session's shuffle sizing spreads the giants; the
-    // aggregate reuses the partitioning (no second exchange), the
-    // input rows are (band, key, id) — cheap to move at any scale —
-    // and downstream stages return to the session's sizing at their
-    // next shuffle.
-    val fanout = buckets.sparkSession.sessionState.conf.numShufflePartitions * 8
-    buckets.repartition(fanout, col("band"), col("key"))
-      .groupBy(col("band"), col("key"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .filter(size(col("ds")) >= 2)
-      .select(explode(pairsOf(col("ds"))).as("p"))
-      .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
+    val buckets = minhashBuckets(hashed, numHashes, bands, p)
+    buckets.select(col("band"), col("key"), col("doc_id").as("doc_a"))
+      .join(buckets.select(col("band"), col("key"), col("doc_id").as("doc_b")),
+        Seq("band", "key"))
+      .filter(col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b"))
+      .distinct()
   }
 
   /** Incremental near-dedup — the production ingest tick: flag each NEW

@@ -22,18 +22,12 @@ object BenchOne {
     // noop-sink materialization, mirroring graft.Bench's timed action
     // (count() lets the optimizer eliminate enrichment joins and
     // unreferenced projections — see the Bench.scala note)
-    val legacyCount = sys.env.get("SPARK_GRAFT_BENCH_ACTION").contains("count")
     for (i <- 1 to 3) {
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      if (legacyCount) {
-        val n = df.count()
-        println(f"pass$i ${(System.nanoTime() - t0) / 1e9}%8.2f s  rows=$n")
-      } else {
-        df.write.format("noop").mode("overwrite").save()
-        println(f"pass$i ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      }
+      graft.SparkEntry.queries(name)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save()
+      println(f"pass$i ${(System.nanoTime() - t0) / 1e9}%8.2f s")
     }
     spark.stop()
   }

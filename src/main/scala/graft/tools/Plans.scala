@@ -267,7 +267,8 @@ object Plans {
     * real plan changes (r12: a no-op regeneration used to churn ~11k
     * lines of exprId noise, burying the three lines that mattered):
     * exprIds (`#123`/`#123L`), exchange `plan_id`s, and the random
-    * `/tmp/temporary-*` checkpoint dirs in micro-batch plans. The
+    * `/tmp/temporary-*` checkpoint dirs in micro-batch plans, lambda
+    * variable and RDD ids, and call-site line numbers. The
     * operator structure, column names, pushed filters, and partitioning
     * arguments — everything the audits reason about — are untouched.
     */
@@ -290,6 +291,14 @@ object Plans {
       .replaceAll(
         "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "x")
       .replaceAll("part-\\d{5}-", "part-x-")
+      // session-global counters: higher-order-function lambda variable
+      // ids (`lambda x_40`), RDD ids (`MapPartitionsRDD[498]`) and the
+      // source line of the call site that made the RDD (`at
+      // Graph.scala:59`) — each moves when an unrelated query or an
+      // unrelated line of the same file changes
+      .replaceAll("(lambda [a-z]+)_\\d+", "$1_x")
+      .replaceAll("RDD\\[\\d+\\]", "RDD[x]")
+      .replaceAll("\\.scala:\\d+", ".scala:x")
       // micro-batch captures: WHICH epoch is the last one before stop()
       // varies with file-listing order, and the epoch drags its batch
       // id, state version, and watermark millis/micros along — the
@@ -364,70 +373,10 @@ object Plans {
     items.toSeq
   }
 
-  private val bareColToken = "^[A-Za-z_][A-Za-z0-9_]*#x[L]?$".r
-
-  /** The formatted-explain field kinds the count-distinct rewrite's
-    * noise can appear under — Expand `Arguments:` plus the downstream
-    * node fields derived from its output order (`Input`/`Keys`/
-    * `Results`/`Functions` lists and the `hashpartitioning` Exchange
-    * arguments). The diagonal/key-run canonicalizers are gated to
-    * these line kinds (ADVICE r14): a `gid#x` that ever surfaces under
-    * some OTHER field in a future Spark version will then show up as
-    * regeneration churn to be audited, not be silently relabeled.
-    */
-  private val rewriteFieldLine =
-    """^\s*(Arguments: |Input \[|Keys \[|Results \[|Functions \[)""".r
-  private[graft] def isRewriteFieldLine(line: String): Boolean =
-    rewriteFieldLine.findFirstIn(line).isDefined
-
-  /** The multi-distinct-COLUMN variant of the rewrite's branch noise
-    * (round 14, caught by the close's no-op regeneration check on
-    * `dq_suggest`): when the distinct terms are bare columns — e.g.
-    * count(DISTINCT user_id), count(DISTINCT event_id) — the Expand
-    * block's diagonal branches hold one COLUMN token each (no CASE),
-    * and which column owns which slot/label is per-JVM hash noise.
-    * Gated to `gid#x` lines only: grouping-sets Expands (where branch
-    * order IS semantic) carry spark_grouping_id, never the rewrite's
-    * gid, so they are untouched. Detect a block with ≥2 single-column
-    * branches of equal arity, erase the integer labels, and reassign
-    * the SORTED columns onto the sorted slots — an honest relabeling,
-    * since the rewrite's gid discrimination is symmetric in it.
-    */
-  private[graft] def sortColumnDiagonals(line: String): String = {
-    if (!line.contains("gid#x") || !isRewriteFieldLine(line)) return line
-    def isSimple(it: String) =
-      it == "null" || it == "n" || (it.nonEmpty && it.forall(_.isDigit))
-    def canon(inner: String): String = {
-      val groups = splitTop(inner)
-      if (groups.size < 2 ||
-          !groups.forall(g => g.startsWith("[") && g.endsWith("]")))
-        return inner
-      val parsed = groups.map(g => splitTop(g.substring(1, g.length - 1)))
-      val arity = parsed.head.size
-      if (!parsed.forall(_.size == arity)) return inner
-      val diagIdx = parsed.zipWithIndex.filter { case (items, _) =>
-        items.count(it => bareColToken.matches(it)) == 1 &&
-          items.forall(it => bareColToken.matches(it) || isSimple(it))
-      }.map(_._2)
-      if (diagIdx.size < 2) return inner
-      val slots = diagIdx.map(bi =>
-        parsed(bi).indexWhere(it => bareColToken.matches(it)))
-      if (slots.distinct.size != slots.size) return inner
-      val cols = diagIdx.map(bi =>
-        parsed(bi).find(it => bareColToken.matches(it)).get).sorted
-      val sortedSlots = slots.sorted
-      val out = parsed.map(_.toArray).toArray
-      // integer labels are assignment noise everywhere in the block
-      for (b <- out; i <- b.indices if isSimple(b(i)) && b(i) != "null")
-        b(i) = "n"
-      diagIdx.zipWithIndex.foreach { case (bi, j) =>
-        for (i <- out(bi).indices if bareColToken.matches(out(bi)(i)))
-          out(bi)(i) = "null"
-        out(bi)(sortedSlots(j)) = cols(j)
-      }
-      out.map(_.mkString("[", ", ", "]")).mkString(", ")
-    }
-    // innermost-first sweep, same machinery as sortExpandBranches
+  /** Rewrite every `[...]` / `(...)` list of `line` with `canon`,
+    * innermost first, so an outer list sees its children already
+    * canonical. */
+  private def sweepLists(line: String)(canon: String => String): String = {
     var str = line
     val opens = scala.collection.mutable.Stack[Int]()
     var k = 0
@@ -449,21 +398,92 @@ object Plans {
     str
   }
 
-  /** Downstream of the column-diagonal rewrite, every flat column list
-    * (Input/Keys/Results/hashpartitioning) leads with the distinct
-    * columns in the SAME noisy order, directly before the `gid#x`
-    * token — sort exactly that run (round 14, the dq_suggest class).
-    * Anchored to a list opener so a CASE tail's `END#x` can never be
-    * pulled into the run.
+  /** The formatted-explain field kinds the count-distinct rewrite's
+    * noise can appear under — Expand `Arguments:` plus the downstream
+    * node fields derived from its output order (`Input`/`Keys`/
+    * `Results`/`Functions` lists and the `hashpartitioning` Exchange
+    * arguments). The diagonal/key-run canonicalizers are gated to
+    * these line kinds (ADVICE r14): a `gid#x` that ever surfaces under
+    * some OTHER field in a future Spark version will then show up as
+    * regeneration churn to be audited, not be silently relabeled.
     */
-  private val keyRunBeforeGid = """([\[(])((?:\w+#x[L]?, )+)gid#x""".r
+  private val rewriteFieldLine =
+    """^\s*(Arguments: |Input \[|Keys \[|Results \[|Functions \[)""".r
+  private[graft] def isRewriteFieldLine(line: String): Boolean =
+    rewriteFieldLine.findFirstIn(line).isDefined
+
+  /** The multi-distinct-COLUMN variant of the rewrite's branch noise
+    * (round 14, caught by the close's no-op regeneration check on
+    * `dq_suggest`): when the distinct terms are columns or CASE-free
+    * expressions — e.g. count(DISTINCT user_id), count(DISTINCT
+    * cast(ts as date)) — the Expand block's diagonal branches hold one
+    * such term each, and which term owns which slot/label is per-JVM
+    * hash noise.
+    * Gated to `gid#x` lines only: grouping-sets Expands (where branch
+    * order IS semantic) carry spark_grouping_id, never the rewrite's
+    * gid, so they are untouched. Detect a block with ≥2 single-term
+    * branches of equal arity, erase the integer labels, and reassign
+    * the SORTED terms onto the sorted slots — an honest relabeling,
+    * since the rewrite's gid discrimination is symmetric in it.
+    */
+  private[graft] def sortColumnDiagonals(line: String): String = {
+    if (!line.contains("gid#x") || !isRewriteFieldLine(line)) return line
+    def isSimple(it: String) =
+      it == "null" || it == "n" || (it.nonEmpty && it.forall(_.isDigit))
+    def isTerm(it: String) = !isSimple(it) && !it.contains("CASE WHEN")
+    def canon(inner: String): String = {
+      val groups = splitTop(inner)
+      if (groups.size < 2 ||
+          !groups.forall(g => g.startsWith("[") && g.endsWith("]")))
+        return inner
+      val parsed = groups.map(g => splitTop(g.substring(1, g.length - 1)))
+      val arity = parsed.head.size
+      if (!parsed.forall(_.size == arity)) return inner
+      val diagIdx = parsed.zipWithIndex.filter { case (items, _) =>
+        items.count(isTerm) == 1 &&
+          items.forall(it => isTerm(it) || isSimple(it))
+      }.map(_._2)
+      if (diagIdx.size < 2) return inner
+      val slots = diagIdx.map(bi =>
+        parsed(bi).indexWhere(isTerm))
+      if (slots.distinct.size != slots.size) return inner
+      val cols = diagIdx.map(bi =>
+        parsed(bi).find(isTerm).get).sorted
+      val sortedSlots = slots.sorted
+      val out = parsed.map(_.toArray).toArray
+      // integer labels are assignment noise everywhere in the block
+      for (b <- out; i <- b.indices if isSimple(b(i)) && b(i) != "null")
+        b(i) = "n"
+      diagIdx.zipWithIndex.foreach { case (bi, j) =>
+        for (i <- out(bi).indices if isTerm(out(bi)(i)))
+          out(bi)(i) = "null"
+        out(bi)(sortedSlots(j)) = cols(j)
+      }
+      out.map(_.mkString("[", ", ", "]")).mkString(", ")
+    }
+    sweepLists(line)(canon)
+  }
+
+  /** Downstream of the column-diagonal rewrite, every flat column list
+    * (Input/Keys/Results/hashpartitioning, and a Sort's order list)
+    * leads with the distinct terms in the SAME noisy order, directly
+    * before the `gid#x` item — sort exactly that run (round 14, the
+    * dq_suggest class). The run must start the list and every item in
+    * it must be an attribute (`...#x`) carrying the gid item's suffix
+    * (e.g. ` ASC NULLS FIRST`), so a CASE tail's `END#x` can never be
+    * pulled into it.
+    */
   private[graft] def sortKeyRunsBeforeGid(line: String): String =
     if (!line.contains("gid#x") || !isRewriteFieldLine(line)) line
-    else keyRunBeforeGid.replaceAllIn(line, m => {
-      val sorted = m.group(2).split(", ").toSeq.sorted.mkString(", ")
-      java.util.regex.Matcher.quoteReplacement(
-        m.group(1) + sorted + ", gid#x")
-    })
+    else sweepLists(line) { inner =>
+      val items = splitTop(inner)
+      val g = items.indexWhere(it => it == "gid#x" || it.startsWith("gid#x "))
+      val suffix = if (g < 0) "" else items(g).stripPrefix("gid#x")
+      val run = items.take(math.max(g, 0))
+      if (run.size < 2 || !run.forall(it => !it.contains("CASE WHEN") &&
+          (it.endsWith("#x" + suffix) || it.endsWith("#xL" + suffix)))) inner
+      else (run.sorted ++ items.drop(g)).mkString(", ")
+    }
 
   private[graft] def sortExpandBranches(line: String): String = {
     // sort the CASE-items of one list among themselves (stable slots
@@ -504,30 +524,9 @@ object Plans {
           .mkString("[", ", ", ", n]")
       }.mkString(", "))
     }
-    // one left-to-right sweep over matched groups: a group's closer is
-    // reached AFTER its children's, so inner lists are canonical by the
-    // time the parent sorts — and canonItems preserves length, so
-    // indices never shift. Stable sort => idempotent.
-    def process(s0: String): String = {
-      var str = s0
-      val opens = scala.collection.mutable.Stack[Int]()
-      var k = 0
-      while (k < str.length) {
-        str.charAt(k) match {
-          case '[' | '(' => opens.push(k)
-          case ']' | ')' if opens.nonEmpty =>
-            val o = opens.pop()
-            val inner = str.substring(o + 1, k)
-            val canon = canonItems(inner)
-            if (canon != inner)
-              str = str.substring(0, o + 1) + canon + str.substring(k)
-          case _ =>
-        }
-        k += 1
-      }
-      str
-    }
-    if (!line.contains("CASE WHEN")) line else process(line)
+    // inner lists are canonical by the time the parent sorts (see
+    // sweepLists); stable sort => idempotent
+    if (!line.contains("CASE WHEN")) line else sweepLists(line)(canonItems)
   }
 
   def main(args: Array[String]): Unit = {

@@ -19,10 +19,11 @@ import graft.ops.TextDedup
   * unchanged) would silently break the documented equivalence; this
   * spec makes that a red test instead of a stale scaladoc.
   *
-  * The staged reference is reconstructed HERE from the surviving
-  * building blocks (bucketPairs, bandsOf, pairIntersections) — the
-  * exact round-10 composition, kept in the test so the op code carries
-  * no dead path.
+  * The staged reference is reconstructed HERE — the exact round-10
+  * composition, kept in the test so the op code carries no dead path:
+  * [[TextDedup.bandsOf]] and [[TextDedup.pairIntersections]] from the
+  * op, plus `bucketPairs`, the round-10 groupBy-collect bucket
+  * expansion, which no operator uses any more and so lives here.
   *
   * The same discipline pins the op's single exact decision
   * ([[TextDedup.decideJaccard]] on the funnel's own hashed rows)
@@ -37,6 +38,30 @@ class CharFunnelEquivalenceSpec extends AnyFunSuite {
   private val n = 5
   private val threshold = 0.5
 
+  /** Bucket table (doc_id, band, key) → candidate pairs (doc_a < doc_b),
+    * NOT deduplicated across buckets. */
+  private def bucketPairs(buckets: DataFrame): DataFrame = {
+    // The pair explosion runs INSIDE the aggregation's partitions, and
+    // its output is up to C(bucket,2)-fold larger than its input — on
+    // template corpora a handful of giant buckets dominate, so the
+    // stage's tail is whichever partition their keys hash into
+    // (measured: a band-key representation change moved the char
+    // funnel ±25% at 32 partitions purely by re-rolling that placement,
+    // BENCH_NOTES round-8 session 6). Pre-partitioning by the grouping
+    // key at 8× the session's shuffle sizing spreads the giants; the
+    // aggregate reuses the partitioning (no second exchange), the
+    // input rows are (band, key, id) — cheap to move at any scale —
+    // and downstream stages return to the session's sizing at their
+    // next shuffle.
+    val fanout = buckets.sparkSession.sessionState.conf.numShufflePartitions * 8
+    buckets.repartition(fanout, col("band"), col("key"))
+      .groupBy(col("band"), col("key"))
+      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
+      .filter(size(col("ds")) >= 2)
+      .select(explode(TextDedup.pairsOf(col("ds"))).as("p"))
+      .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
+  }
+
   private def stagedCandidates(hashed: DataFrame, sigs: DataFrame,
                                cap: Int, bands: Int,
                                margin: Double): DataFrame = {
@@ -45,8 +70,8 @@ class CharFunnelEquivalenceSpec extends AnyFunSuite {
         TextDedup.charNumHashes)).toInt
     val sigInts = sigs.select(col("doc_id"),
       transform(col("sig"), v => v.cast("int")).as("sig"))
-    val cand = TextDedup
-      .bucketPairs(TextDedup.bandsOf(sigs, TextDedup.charNumHashes, bands))
+    val cand =
+      bucketPairs(TextDedup.bandsOf(sigs, TextDedup.charNumHashes, bands))
       .unionByName(TextDedup.pairIntersections(
         hashed.withColumnRenamed("x", "shingle"), cap)
         .select(col("doc_a"), col("doc_b")))
@@ -83,40 +108,6 @@ class CharFunnelEquivalenceSpec extends AnyFunSuite {
         s"(e.g. ${onlyFused.take(3)}), ${onlyStaged.size} only-staged " +
         s"(e.g. ${onlyStaged.take(3)})")
     } finally { hashed.unpersist(); sigs.unpersist() }
-  }
-
-  test("all three A/B LSH shapes admit the identical candidate set") {
-    // the r12 skew A/B (tools.AbChar / BENCH_NOTES) compared plan
-    // SHAPES only; this pins that the toggle arms are semantically one
-    // operator, so a timing rerun can never compare different outputs
-    val spark = TestSpark.spark
-    spark.catalog.clearCache()
-    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val (bands, cap, margin) =
-      TextDedup.charFunnelParams(threshold, docs.count())
-    val hashed = TextDedup.charHashedShingles(
-      TextDedup.charShingleHashes(docs, n)).persist()
-    val sigs = TextDedup.minhashSigs(hashed, TextDedup.charNumHashes,
-      TextDedup.lshPrime).persist()
-    val prev = sys.props.get("graft.char.lsh")
-    try {
-      val sets = Seq("join", "join_repart", "group").map { arm =>
-        sys.props("graft.char.lsh") = arm
-        arm -> TextDedup
-          .charFusedCandidates(hashed, sigs, cap, bands, threshold, margin)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      }
-      assert(sets.head._2.nonEmpty, "degenerate: zero candidates")
-      for (Seq((a, sa), (b, sb)) <- sets.sliding(2))
-        assert(sa == sb, s"$a vs $b candidate sets diverged: " +
-          s"${(sa -- sb).size} only-$a, ${(sb -- sa).size} only-$b")
-    } finally {
-      prev match {
-        case Some(v) => sys.props("graft.char.lsh") = v
-        case None => sys.props -= "graft.char.lsh"
-      }
-      hashed.unpersist(); sigs.unpersist()
-    }
   }
 
   /** The pre-single-decision shape of nearDupJaccardChars after its

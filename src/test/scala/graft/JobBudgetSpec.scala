@@ -2,12 +2,14 @@ package graft
 
 import java.io.File
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,17 +25,28 @@ class JobBudgetSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf0001
 
-  /** `body`'s result and the call sites of the Spark jobs it launched
-    * from this thread. */
+  /** `body`'s result and the user call sites of the Spark jobs it
+    * launched from this thread. AQE submits a query's stage jobs from
+    * its own thread pool, so their first stage is named after a
+    * `CompletableFuture` frame; the SQL execution a job belongs to
+    * carries the call site of the action that started it instead. */
   private def jobs[T](body: => T): (T, Seq[String]) = {
     val sc = spark.sparkContext
     val group = s"job-budget-${java.util.UUID.randomUUID()}"
     val sites = new ConcurrentLinkedQueue[String]
+    val executionSites = new ConcurrentHashMap[String, String]
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          executionSites.put(s.executionId.toString, s.description)
+        case _ =>
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null &&
             e.properties.getProperty("spark.jobGroup.id") == group)
-          sites.add(e.stageInfos.headOption.fold("?")(_.name))
+          sites.add(Option(e.properties.getProperty("spark.sql.execution.id"))
+            .flatMap(id => Option(executionSites.get(id)))
+            .getOrElse(e.stageInfos.headOption.fold("?")(_.name)))
     }
     sc.addSparkListener(listener)
     sc.setJobGroup(group, null)

@@ -24,6 +24,9 @@ class PlansNormalizeSpec extends AnyFunSuite {
       |WriteToDataSourceV2 MicroBatchWrite[epoch: 4, writer: Memory@64051260]
       |state info [ checkpoint = file:/tmp/temporary-74201a44-dc9f-43a9-8945-aa751b3a6802/state, runId = a9bf8ec6-3c99-4b85-ba44-5a90f34c008d, ver = 4 ]
       |left value predicate: (view_ts#98-T3600000ms <= 1706649038234000)
+      |Output [1]: [transform(embedding#4, lambdafunction((lambda x_40#51 * 2.0), lambda x_40#51, false)) AS embedding#7]
+      |Arguments: [node#3], MapPartitionsRDD[498] at createDataFrame at Graph.scala:59, ExistingRDD, UnknownPartitioning(0)
+      |Arguments: [a#5], MapPartitionsRDD[906] at localCheckpoint at TextDedup.scala:1624, ExistingRDD, UnknownPartitioning(0)
       |""".stripMargin
 
   test("normalization is idempotent") {
@@ -35,7 +38,8 @@ class PlansNormalizeSpec extends AnyFunSuite {
     for (leak <- Seq("#8", "#43L", "plan_id=19", "codegen id : 6",
         "part-00028", "b26d5397", "@415c790e", "epoch: 4",
         "temporary-74201a44", "runId = a9bf8ec6", "ver = 4",
-        "1706649038234000"))
+        "1706649038234000", "x_40", "RDD[498]", "RDD[906]", "Graph.scala:59",
+        "TextDedup.scala:1624"))
       assert(!out.contains(leak), s"unstripped varying id: $leak")
   }
 
@@ -44,7 +48,9 @@ class PlansNormalizeSpec extends AnyFunSuite {
     // same substrings PlanFingerprintSpec counts
     for (tok <- Seq("Exchange", "Scan parquet", "BroadcastNestedLoopJoin",
         "HashAggregate", "hashpartitioning(", "ENSURE_REQUIREMENTS",
-        "l_returnflag", "InMemoryFileIndex", "MicroBatchWrite"))
+        "l_returnflag", "InMemoryFileIndex", "MicroBatchWrite",
+        "lambda x_x", "MapPartitionsRDD[x] at createDataFrame at Graph.scala:x",
+        "at localCheckpoint at TextDedup.scala:x", "ExistingRDD"))
       assert(out.contains(tok), s"normalizer ate operator token: $tok")
     // partitioning arity (a real argument, not an id) survives
     assert(out.contains("hashpartitioning(l_returnflag#x, 4)"))
@@ -149,6 +155,32 @@ class PlansNormalizeSpec extends AnyFunSuite {
     // a CASE tail's END#x must never be pulled into the sorted run
     val withCase = "Keys [3]: [CASE WHEN (w = 'a') THEN d END#12, zz#3, gid#9]"
     assert(n(withCase).contains("END#x, zz#x, gid#x"))
+  }
+
+  test("expression-term Expand diagonals and the Sort/Keys runs they " +
+       "feed canonicalize (count(DISTINCT cast(...)) class)") {
+    // column_profile: count(DISTINCT o_custkey), count(DISTINCT
+    // cast(o_orderdate as date)), ... — the distinct terms are
+    // expressions, and their slot order is per-JVM hash noise
+    def block(first: String, second: String) =
+      s"Arguments: [[null, null, n, CASE WHEN isnull(v#7) THEN 1 ELSE 0 END], " +
+        s"[$first, null, n, null], [null, $second, n, null]], [gid#9]"
+    val cast = "cast(round((p#4 * 100.0), 0) as bigint)"
+    assert(n(block("o_custkey#3", cast)) === n(block(cast, "o_custkey#3")))
+    val castAttr = "CAST(round((p * 100.0D), 0) AS BIGINT)#12"
+    def sortArgs(a: String, b: String) =
+      s"Arguments: [$a ASC NULLS FIRST, $b ASC NULLS FIRST, " +
+        "gid#9 ASC NULLS FIRST], false, 0"
+    assert(n(sortArgs("o_custkey#3", castAttr)) ===
+      n(sortArgs(castAttr, "o_custkey#3")))
+    def keys(a: String, b: String) = s"Keys [3]: [$a, $b, gid#9]"
+    assert(n(keys("o_custkey#3", castAttr)) === n(keys(castAttr, "o_custkey#3")))
+    for (line <- Seq(block("o_custkey#3", cast), sortArgs(castAttr, "o_custkey#3"),
+        keys(castAttr, "o_custkey#3")))
+      assert(n(n(line)) === n(line), "idempotent")
+    // the gid item and what follows it keep their slots
+    assert(n(sortArgs(castAttr, "o_custkey#3"))
+      .endsWith("gid#x ASC NULLS FIRST], false, 0"))
   }
 
   // ---- round 15 (ADVICE r14): the rewrites are gated to the known
