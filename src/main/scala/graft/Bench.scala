@@ -1,7 +1,53 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 object Bench {
+  /** Build and action wall seconds of one [[noopPass]], and its failure
+    * (a failed step's time runs up to the throw). */
+  final case class Timed(buildS: Double, actionS: Double,
+                         error: Option[Throwable]) {
+    def seconds: Double = buildS + actionS
+  }
+
+  /** The timed action of every measuring main ([[Bench]],
+    * [[tools.Scaling]], [[tools.Trace]]): build the query, then
+    * materialize it into the no-op sink, NOT count(). Spark 4's
+    * optimizer eliminates an unreferenced left join whose right keys are
+    * distinct (and prunes unreferenced projections to the scan), so
+    * `.count()` silently SKIPS the load-bearing work of
+    * enrichment-shaped ops — measured at sf0.1 (round 15):
+    * web_pipeline_near counts in 0.6 s but takes 4.3 s to materialize
+    * (the near-verify arms never ran under count), and web_pipeline's
+    * cleaning folds prune to a bare scan. The noop write consumes every
+    * output row and column, so the timed window covers the operator's
+    * actual work while writing nothing.
+    *
+    * `between` runs untimed after the build and `after` untimed after
+    * the action. Then the operator-internal persists (shingle sets,
+    * signatures, k-means corpus) are dropped: they are scoped to one
+    * query, so queries time independently instead of competing for the
+    * storage pool.
+    */
+  def noopPass(spark: SparkSession, build: => DataFrame,
+               between: () => Unit = () => (),
+               after: DataFrame => Unit = _ => ()): Timed = {
+    var buildS, actionS = 0.0
+    def timed[T](body: => T)(set: Double => Unit): T = {
+      val t0 = System.nanoTime()
+      try body finally set((System.nanoTime() - t0) / 1e9)
+    }
+    val error =
+      try {
+        val df = timed(build)(buildS = _)
+        between()
+        timed(df.write.format("noop").mode("overwrite").save())(actionS = _)
+        after(df)
+        None
+      } catch { case e: Throwable => Some(e) }
+    spark.catalog.clearCache()
+    Timed(buildS, actionS, error)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -19,32 +65,16 @@ object Bench {
       .map(_.split(",").map(_.trim).toSet)
     val selected = only.fold(SparkEntry.queries)(
       names => SparkEntry.queries.filter { case (n, _) => names(n) })
-    // Timed action (round 15): full-column materialization into the
-    // no-op sink, NOT count(). Spark 4's optimizer eliminates an
-    // unreferenced left join whose right keys are distinct (and prunes
-    // unreferenced projections to the scan), so `.count()` silently
-    // SKIPS the load-bearing work of enrichment-shaped ops — measured
-    // at sf0.1: web_pipeline_near counts in 0.6 s but takes 4.3 s to
-    // materialize (the near-verify arms never ran under count), and
-    // web_pipeline's cleaning folds prune to a bare scan. The noop
-    // write consumes every output row and column, so the timed window
-    // covers the operator's actual work while writing nothing.
     def once(): (Map[String, Double], List[String]) = {
       var failed = List.empty[String]
       val times = selected.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
+        val t = noopPass(spark, fn(spark, sfDir))
+        t.error.foreach { e =>
           System.err.println(
             s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
           failed ::= name
         }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // operator-internal persists (shingle sets, signatures, k-means
-        // corpus) are scoped to one query — drop them so queries time
-        // independently instead of competing for the storage pool
-        spark.catalog.clearCache()
-        name -> dt
+        name -> t.seconds
       }
       (times, failed.reverse)
     }

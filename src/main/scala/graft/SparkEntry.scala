@@ -264,17 +264,6 @@ object SparkEntry {
     webNearStaged0(s, dir, webSpanRendered).unionByName(sem)
   }
 
-  /** The front-door staged corpora by variant — for the dev profiler
-    * (`graft.tools.ProfWeb`) and the margin tool; not part of the
-    * driver contract.
-    */
-  private[graft] def webStagings(s: SparkSession, dir: String)
-      : Seq[(String, DataFrame)] = Seq(
-    "web_near" -> webNearStaged(s, dir),
-    "web_sem" -> webSemStaged(s, dir),
-    "web_substr" -> webSubstrStaged(s, dir),
-    "web_full" -> webFullStaged(s, dir))
-
   /** Fixture-margin probes for `graft.tools.MarginCheck` (ADVICE r14):
     * the kept canonical pages of each front-door staging variant —
     * the exact population whose pairwise Jaccard the near oracle
@@ -292,16 +281,6 @@ object SparkEntry {
       "web_substr" -> keptOf(webSubstrStaged(s, dir)),
       "web_full" -> keptOf(webFullStaged(s, dir)))
   }
-
-  /** The sem stage's candidate vector population (near survivors ∩
-    * embedding side table) — the population whose complete exact-cosine
-    * pair set the sem oracle computes; `graft.tools.MarginCheck`
-    * asserts nothing natural sits in the banding-vulnerable cosine
-    * band below the planted 1.0 class.
-    */
-  private[graft] def semMarginVectors(s: SparkSession,
-                                      dir: String): DataFrame =
-    semMarginVectorProbes(s, dir).head._2
 
   /** The sem-candidate vector population per sem-staged variant
     * (`graft.tools.MarginCheck` asserts the cosine band for each —

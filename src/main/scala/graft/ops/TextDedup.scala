@@ -468,11 +468,13 @@ object TextDedup {
 
   /** Corpus-size floor above which [[jaccardPairsOn]] dispatches to the
     * prefix-filtered shape. Measured crossover (optimization round 15,
-    * sf0.1, local[32], ProfPairs + BenchOne): the 5.5k-doc documents
-    * corpus runs the posting expansion in ~2 s where the prefix shape's
-    * extra stages (df join, per-doc sort, candidate distinct, two
-    * verify joins) cost ~4 s — while the 96k-doc events corpus runs
-    * 14 s posting (24.2M expanded pairs) vs 5.6 s prefix (5.6M). The
+    * sf0.1, local[32], single-query profilers since replaced by
+    * `tools.Trace`; [[graft.PrefixPairsSpec]] asserts the two shapes'
+    * row equality): the 5.5k-doc documents corpus runs the posting
+    * expansion in ~2 s where the prefix shape's extra stages (df join,
+    * per-doc sort, candidate distinct, two verify joins) cost ~4 s —
+    * while the 96k-doc events corpus runs 14 s posting (24.2M expanded
+    * pairs) vs 5.6 s prefix (5.6M). The
     * crossover sits in the tens of thousands of docs; above it the
     * expansion volume dwarfs the fixed stage overhead, and at 100 TB
     * every real corpus takes the prefix path — the floor only keeps
@@ -485,10 +487,10 @@ object TextDedup {
     * n-gram variants. Since optimization round 15 this dispatches on
     * corpus size: ≥ [[prefixDispatchFloor]] docs routes through
     * [[jaccardPairsPrefix]] (identical output rows — equivalence argued
-    * there, A/B-asserted by [[graft.tools.ProfPairs]] and oracle-gated
-    * at all three SFs); below it the posting expansion's flat overhead
-    * wins. Both shapes emit THE SAME rows, so the dispatch is a pure
-    * physical-plan decision (the AQE philosophy, one level up).
+    * there, asserted row-equal by [[graft.PrefixPairsSpec]] and
+    * oracle-gated at all three SFs); below it the posting expansion's
+    * flat overhead wins. Both shapes emit THE SAME rows, so the dispatch
+    * is a pure physical-plan decision (the AQE philosophy, one level up).
     */
   private def jaccardPairsOn(sh: DataFrame, threshold: Double,
                              maxDf: Int, corpusSize: Long): DataFrame =
@@ -499,7 +501,7 @@ object TextDedup {
 
   /** The pre-round-15 posting-expansion shape of [[jaccardPairsOn]] —
     * the small-corpus dispatch target and the A/B equality comparator
-    * ([[graft.tools.ProfPairs]]).
+    * ([[graft.PrefixPairsSpec]]).
     */
   private[graft] def jaccardPairsPosting(sh: DataFrame, threshold: Double,
                                          maxDf: Int): DataFrame = {
@@ -954,10 +956,10 @@ object TextDedup {
       hashes, threshold)
   }
 
-  // The char funnel's stage builders are shared with the dev profiler
-  // (tools.ProfChars) so a tuning change here can never leave the
-  // profiler measuring a different pipeline than the op it attributes
-  // regressions to.
+  // The char funnel's stage builders are shared with
+  // CharFunnelEquivalenceSpec, which checks them against the staged
+  // reference; `tools.Trace near_dedup_chars` attributes the op's time
+  // to the stages they run.
 
   private[graft] val charNumHashes = 64
 

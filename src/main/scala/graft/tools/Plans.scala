@@ -263,12 +263,36 @@ object Plans {
   val auditedNames: Set[String] =
     audited.map(_._1).toSet ++ streamingAudited.map(_._1).toSet
 
+  /** Occurrences of `token` in a plan string: the substring count the
+    * plan fingerprint gates read (a formatted plan prints each scan
+    * twice, tree line and detail block, on both sides of every bound).
+    */
+  def count(plan: String, token: String): Int = {
+    var n = 0; var i = plan.indexOf(token)
+    while (i >= 0) { n += 1; i = plan.indexOf(token, i + 1) }
+    n
+  }
+
+  /** Plain shuffle `Exchange` tree nodes of a formatted plan, anchored
+    * to the tree line so BroadcastExchange and ReusedExchange do not
+    * count. */
+  def exchanges(plan: String): Int =
+    """(?m)^[\s+:|-]*Exchange \(""".r.findAllIn(plan).size
+
+  /** The fingerprint token line of a formatted plan. */
+  def tokens(plan: String): String =
+    s"scans=${count(plan, "Scan parquet")} exchanges=${exchanges(plan)} " +
+      s"bnlj=${count(plan, "BroadcastNestedLoopJoin")} " +
+      s"cartesian=${count(plan, "CartesianProduct")} " +
+      s"inmemory=${count(plan, "InMemoryRelation")}"
+
   /** Strip run-varying ids so a PLANS.md regeneration diffs ONLY on
     * real plan changes (r12: a no-op regeneration used to churn ~11k
     * lines of exprId noise, burying the three lines that mattered):
     * exprIds (`#123`/`#123L`), exchange `plan_id`s, and the random
     * `/tmp/temporary-*` checkpoint dirs in micro-batch plans, lambda
-    * variable and RDD ids, and call-site line numbers. The
+    * variable and RDD ids, call-site line numbers, and a broadcast
+    * stage's size estimate. The
     * operator structure, column names, pushed filters, and partitioning
     * arguments — everything the audits reason about — are untouched.
     */
@@ -321,6 +345,10 @@ object Plans {
       // micro-batch plans: *(3) Project — the stage NUMBER is traversal
       // noise, the star structure is the audited content
       .replaceAll("\\*\\(\\d+\\)", "*(x)")
+      // a broadcast query stage's sizeInBytes is the built relation's
+      // memory footprint, whose page size follows the JVM heap (32 MiB at
+      // a 4 GB heap, 64 MiB at 8 GB); its rowCount is the plan fact
+      .replaceAll("(BroadcastQueryStage .*sizeInBytes=)[^,)]+", "$1x")
       .linesIterator.map(normalizeGidLabels).map(sortColumnDiagonals)
       .map(sortKeyRunsBeforeGid).map(sortExpandBranches)
       .mkString("", "\n", if (plan.endsWith("\n")) "\n" else "")

@@ -41,7 +41,7 @@ import java.nio.file.{Files, Paths}
   */
 object Scaling {
 
-  private val SfDirs =
+  private[tools] val SfDirs =
     Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
       "/root/testdata/sf0.1")
 
@@ -147,17 +147,13 @@ object Scaling {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
+    // the bench's timed action, so the sweep's ratios measure the
+    // operator's actual work
     def once(name: String, sfDir: String): Double = {
-      val t0 = System.nanoTime()
-      // noop-sink materialization, mirroring graft.Bench's timed action
-      // (count() lets the optimizer eliminate enrichment joins and
-      // unreferenced projections — the Bench.scala round-15 note), so
-      // the sweep's ratios measure the operator's actual work
-      graft.SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      dt
+      val t = graft.Bench.noopPass(spark,
+        graft.SparkEntry.queries(name)(spark, sfDir))
+      t.error.foreach(e => throw e)
+      t.seconds
     }
     // warm = MIN over `warmPasses` timed passes after one cold pass
     def measure(names: Seq[String], sfDir: String,

@@ -2,14 +2,8 @@ package graft
 
 import java.io.File
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
-import scala.jdk.CollectionConverters._
 
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
-  SparkListenerJobStart}
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,39 +19,11 @@ class JobBudgetSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf0001
 
-  /** `body`'s result and the user call sites of the Spark jobs it
-    * launched from this thread. AQE submits a query's stage jobs from
-    * its own thread pool, so their first stage is named after a
-    * `CompletableFuture` frame; the SQL execution a job belongs to
-    * carries the call site of the action that started it instead. */
+  /** `body`'s result and the call sites of the Spark jobs it launched,
+    * from the query trace's recorder. */
   private def jobs[T](body: => T): (T, Seq[String]) = {
-    val sc = spark.sparkContext
-    val group = s"job-budget-${java.util.UUID.randomUUID()}"
-    val sites = new ConcurrentLinkedQueue[String]
-    val executionSites = new ConcurrentHashMap[String, String]
-    val listener = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart =>
-          executionSites.put(s.executionId.toString, s.description)
-        case _ =>
-      }
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          sites.add(Option(e.properties.getProperty("spark.sql.execution.id"))
-            .flatMap(id => Option(executionSites.get(id)))
-            .getOrElse(e.stageInfos.headOption.fold("?")(_.name)))
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, null)
-    try {
-      val out = body
-      TestListenerBus.drain(sc)
-      (out, sites.asScala.toSeq)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    val (out, rec) = graft.tools.Trace.record(spark)(_ => body)
+    (out, rec.sites)
   }
 
   test("Tables.t launches no job on any testdata table") {

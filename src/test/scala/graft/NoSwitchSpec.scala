@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * reads a JVM property, and only the bench and verify mains and the
   * `tools` read environment variables — and then only the deployment
   * settings below (core count, scale-factor dir, query subset, bench
-  * repetitions, profiler shuffle width). A measured-and-lost variant
+  * repetitions). A measured-and-lost variant
   * kept behind a `-D` or env switch inside an operator turns this red;
   * the numbers of a lost A/B belong in BENCH_NOTES.md and git, not in a
   * live branch.
@@ -19,7 +19,7 @@ class NoSwitchSpec extends AnyFunSuite {
   private val read =
     """sys\.props|System\.getProperty|sys\.env|System\.getenv""".r
   private val deploymentSetting =
-    """"SPARK_GRAFT_(CPUS|SF_DIR|ONLY|BENCH_REPS|SHUFFLE)"""".r
+    """"SPARK_GRAFT_(CPUS|SF_DIR|ONLY|BENCH_REPS)"""".r
 
   private def mayReadEnv(p: Path): Boolean = {
     val rel = root.relativize(p).toString

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.tools.Plans.{count, exchanges}
+
 /** Golden plan-shape gate for the plan-critical queries: an accidental
   * cartesian, a lost pushdown that re-scans the corpus, or an
   * exponential lineage blowup must fail a TEST, not wait for a bench
@@ -214,12 +216,6 @@ class PlanFingerprintSpec extends AnyFunSuite {
     ("streaming_web_pipeline", "lorem ipsum", 1, 0)
   )
 
-  private def count(hay: String, needle: String): Int = {
-    var n = 0; var i = hay.indexOf(needle)
-    while (i >= 0) { n += 1; i = hay.indexOf(needle, i + 1) }
-    n
-  }
-
   for ((name, maxScans, maxExch, maxBnlj) <- golden) {
     test(s"plan fingerprint: $name (scans ≤ ${maxScans}·1.5, " +
          s"exchanges ≤ ${maxExch}·1.5, no cartesian)") {
@@ -246,7 +242,7 @@ class PlanFingerprintSpec extends AnyFunSuite {
       val scans = count(plan, "Scan parquet")
       // line-anchored: plain shuffle Exchange tree nodes only (NOT
       // BroadcastExchange/ReusedExchange, same counting as the goldens)
-      val exch = """(?m)^[\s+:|-]*Exchange \(""".r.findAllIn(plan).size
+      val exch = exchanges(plan)
       assert(scans <= math.ceil(maxScans * 1.5).toInt + 1,
         s"$name scan-token count $scans blew past the audited $maxScans " +
         "— a lost reuse/pushdown or an unrolled-lineage blowup")

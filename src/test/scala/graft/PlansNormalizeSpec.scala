@@ -27,6 +27,7 @@ class PlansNormalizeSpec extends AnyFunSuite {
       |Output [1]: [transform(embedding#4, lambdafunction((lambda x_40#51 * 2.0), lambda x_40#51, false)) AS embedding#7]
       |Arguments: [node#3], MapPartitionsRDD[498] at createDataFrame at Graph.scala:59, ExistingRDD, UnknownPartitioning(0)
       |Arguments: [a#5], MapPartitionsRDD[906] at localCheckpoint at TextDedup.scala:1624, ExistingRDD, UnknownPartitioning(0)
+      |   :  +- BroadcastQueryStage (19), Statistics(sizeInBytes=64.0 MiB, rowCount=2)
       |""".stripMargin
 
   test("normalization is idempotent") {
@@ -39,7 +40,7 @@ class PlansNormalizeSpec extends AnyFunSuite {
         "part-00028", "b26d5397", "@415c790e", "epoch: 4",
         "temporary-74201a44", "runId = a9bf8ec6", "ver = 4",
         "1706649038234000", "x_40", "RDD[498]", "RDD[906]", "Graph.scala:59",
-        "TextDedup.scala:1624"))
+        "TextDedup.scala:1624", "64.0 MiB"))
       assert(!out.contains(leak), s"unstripped varying id: $leak")
   }
 
@@ -50,10 +51,21 @@ class PlansNormalizeSpec extends AnyFunSuite {
         "HashAggregate", "hashpartitioning(", "ENSURE_REQUIREMENTS",
         "l_returnflag", "InMemoryFileIndex", "MicroBatchWrite",
         "lambda x_x", "MapPartitionsRDD[x] at createDataFrame at Graph.scala:x",
-        "at localCheckpoint at TextDedup.scala:x", "ExistingRDD"))
+        "at localCheckpoint at TextDedup.scala:x", "ExistingRDD",
+        "BroadcastQueryStage (19), Statistics(sizeInBytes=x, rowCount=2)"))
       assert(out.contains(tok), s"normalizer ate operator token: $tok")
     // partitioning arity (a real argument, not an id) survives
     assert(out.contains("hashpartitioning(l_returnflag#x, 4)"))
+  }
+
+  test("a broadcast stage's heap-dependent size estimate normalizes; " +
+       "other stages' sizes and every rowCount survive") {
+    def stage(size: String) =
+      s"+- BroadcastQueryStage (26), Statistics(sizeInBytes=$size, rowCount=12)"
+    assert(n(stage("32.0 MiB")) === n(stage("64.0 MiB")))
+    assert(n(stage("1025.5 KiB")).contains("rowCount=12"))
+    val shuffle = "+- ShuffleQueryStage (31), Statistics(sizeInBytes=336.0 B, rowCount=14)"
+    assert(n(shuffle) === shuffle)
   }
 
   // ---- round 13: the retired residual churn classes -------------------
