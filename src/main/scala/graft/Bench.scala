@@ -48,23 +48,35 @@ object Bench {
     Timed(buildS, actionS, error)
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+  /** The local session every main runs on: `cores` task slots and as
+    * many shuffle partitions, UTC, no UI, and the managed-table warehouse
+    * pinned inside the repo whatever the working directory.
+    */
+  def localSession(cores: Int, logLevel: String = "WARN"): SparkSession = {
     val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // pin managed-table location inside the repo regardless of cwd
       .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // local iteration aid, mirrors Verify: SPARK_GRAFT_ONLY=q1,q2
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only.fold(SparkEntry.queries)(
-      names => SparkEntry.queries.filter { case (n, _) => names(n) })
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
+  /** The registry, or with `SPARK_GRAFT_ONLY=q1,q2` only the named
+    * queries: the local iteration aid of [[Bench]] and [[Verify]].
+    */
+  def selectedQueries: Map[String, (SparkSession, String) => DataFrame] =
+    sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+      .fold(SparkEntry.queries)(
+        names => SparkEntry.queries.filter { case (n, _) => names(n) })
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark =
+      localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    val selected = selectedQueries
     def once(): (Map[String, Double], List[String]) = {
       var failed = List.empty[String]
       val times = selected.map { case (name, fn) =>

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Fixture-margin gate for the recall-gated front-door stages (ADVICE
   * r14): the near and sem oracles compute COMPLETE exact pair sets
   * while the engine proposes candidates by LSH banding, so a NATURAL
@@ -32,15 +30,12 @@ import org.apache.spark.sql.SparkSession
 object MarginCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cores = sys.env.get("SPARK_GRAFT_CPUS").fold(
+      Runtime.getRuntime.availableProcessors)(_.toInt)
+    val spark = graft.Bench.localSession(cores, "ERROR")
 
-    for ((name, kept) <- graft.SparkEntry.webMarginProbes(spark, sfDir)) {
+    for ((name, kept) <-
+        graft.queries.WebQueries.webMarginProbes(spark, sfDir)) {
       // complete pair set at J >= 1/2 — exactly what the oracle emits
       val pairs = graft.ops.TextDedup.allPairsJaccard(kept, k = 3,
           num = 1, den = 2)
@@ -57,7 +52,7 @@ object MarginCheck {
     }
 
     for ((name, vecs) <-
-        graft.SparkEntry.semMarginVectorProbes(spark, sfDir)) {
+        graft.queries.WebQueries.semMarginVectorProbes(spark, sfDir)) {
       val cos = graft.ops.Similarity.cosineNearDupExact(vecs, 0.85)
         .select("vec_a", "vec_b", "cos").collect()
       val badSem = cos.filter(_.getDouble(2) < 0.999)

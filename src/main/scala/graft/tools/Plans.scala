@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import java.nio.file.{Files, Paths}
 
 /** Dumps `explain("formatted")` for the queries whose physical shape the
@@ -559,14 +557,8 @@ object Plans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // 4 cores on any host: the plans print their partition counts
+    val spark = graft.Bench.localSession(4, "ERROR")
 
     val sb = new StringBuilder
     sb ++= "# PLANS — physical-plan evidence (generated by graft.tools.Plans)\n\n"

@@ -137,15 +137,8 @@ object Scaling {
     val sub = all.filterNot(heavy.toSet)
     println(s"measuring ${heavy.size} gated (> $marginBar s warm) + " +
       s"${sub.size} sub-bar queries at sf0.001 / sf0.01 / sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.localSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     // the bench's timed action, so the sweep's ratios measure the
     // operator's actual work

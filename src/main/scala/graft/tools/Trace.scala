@@ -189,14 +189,7 @@ object Trace {
     val sfDir = args.lift(1).getOrElse(Scaling.SfDirs(1))
     val cores = sys.env.get("SPARK_GRAFT_CPUS").fold(
       Runtime.getRuntime.availableProcessors)(_.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.localSession(cores, "ERROR")
     val dir = Paths.get("target/trace")
     Files.createDirectories(dir)
     for (name <- names) {

@@ -16,25 +16,26 @@ class ContractSpec extends AnyFunSuite {
     assert(SparkEntry.entry(TestSpark.spark).count() > 0)
   }
 
-  test("no duplicate query/oracle registrations (a Map literal dedupes " +
-       "SILENTLY — a repeated key shadows an op and its oracle still " +
-       "matches, so only the source can reveal the collision)") {
-    // count textual registrations in the source and compare with the
-    // constructed maps; a duplicate key makes the map smaller
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")),
-      "UTF-8")
-    val names = "\"([a-z0-9_]+)\" -> \\(\\(s, dir\\)".r
-      .findAllMatchIn(src).map(_.group(1)).toSeq
-    // set equality (not a bare count): if the regex ever misses a
-    // reformatted registration, the failure NAMES the drifted key
-    // instead of reporting an opaque count mismatch
-    assert(names.toSet === SparkEntry.queries.keySet,
-      s"registry/source drift — regex-missed or shadowed keys: " +
-        s"${(names.toSet diff SparkEntry.queries.keySet) union
-            (SparkEntry.queries.keySet diff names.toSet)}")
-    val dups = names.groupBy(identity).filter(_._2.size > 1).keys
-    assert(dups.isEmpty, s"duplicate query registrations: $dups")
+  test("the registry holds every QueryDef: no name is shadowed") {
+    assert(SparkEntry.queries.size === SparkEntry.defs.size)
+  }
+
+  private def stub(name: String, oracle: => String) =
+    queries.QueryDef(name, (s, _) => s.emptyDataFrame, oracle)
+
+  test("deriving the registry from two defs with one name fails, " +
+       "naming the duplicate") {
+    val e = intercept[IllegalArgumentException](queries.QueryDef.index(
+      Seq(stub("dup_a", "SELECT 1"), stub("b", "SELECT 2"),
+        stub("dup_a", "SELECT 3")))(_.build))
+    assert(e.getMessage.contains("dup_a"))
+    assert(!e.getMessage.contains(" b"))
+  }
+
+  test("deriving the builders never builds an oracle") {
+    val q = queries.QueryDef.index(
+      Seq(stub("a", throw new IllegalStateException("oracle built"))))(_.build)
+    assert(q.keySet === Set("a"))
   }
 
   test("every registered query appears in the OPERATORS.md catalog " +

@@ -6,7 +6,7 @@
 #   tools/roundclose.sh <round-number>        e.g. tools/roundclose.sh 12
 #
 # Produces, in dependency order:
-#   1. BENCH_r<N>_local.json   isolated bench snapshot (sf0.1, local[32])
+#   1. BENCH_r<N>_local.json   isolated bench snapshot (sf0.1, local[nproc])
 #   2. SCALING.json            3-SF scaling sweep (gated tier) — reads
 #      + SCALING_SUB.json      snapshot (1) via BenchFiles.latestWarm, so
 #                              order matters; the SUB tier profiles every
@@ -57,14 +57,14 @@ for sf in sf0.001 sf0.01 sf0.1; do
     graft.tools.MarginCheck "/root/testdata/$sf"
 done
 
-echo "== 1/6 isolated bench snapshot (sf0.1, local[32]) =="
+echo "== 1/6 isolated bench snapshot (sf0.1, local[$(nproc)]) =="
 # Bare-java, NOT sbt runMain: round 14 measured the same HEAD twice —
 # sbt-forked bench 368.4 s warm vs bare-java 319.9 s on the identical
 # shared set (+15% phantom drift from the sbt parent JVM's residency/
 # GC next to the forked benchmark). The r13 "host drift" reads were
 # largely THIS. Compile first so classes match HEAD.
 sbt -batch compile
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS="$(nproc)" \
   java -cp 'target/scala-2.13/classes:/opt/spark/jars/*' graft.Bench
 cp target/bench.json "BENCH_r${N2}_local.json"
 echo "wrote BENCH_r${N2}_local.json"
@@ -74,7 +74,7 @@ echo "== 2/6 scaling sweep (3 SFs, one JVM) =="
 # inflates the forked child's absolute numbers ~15%; round 15 moves the
 # sweep onto the same harness as the bench so its slot absolutes are
 # comparable)
-SPARK_GRAFT_CPUS=32 java -cp 'target/scala-2.13/classes:/opt/spark/jars/*' \
+SPARK_GRAFT_CPUS="$(nproc)" java -cp 'target/scala-2.13/classes:/opt/spark/jars/*' \
   graft.tools.Scaling
 
 echo "== 3/6 PLANS.md =="
