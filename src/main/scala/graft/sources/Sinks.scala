@@ -97,12 +97,7 @@ object Sinks {
   def auditAppend(spark: SparkSession, outPath: String,
                   rows: Seq[(String, Long, String, String, Seq[String])],
                   fresh: Boolean = false): DataFrame = {
-    if (fresh) {
-      val p = new java.io.File(outPath)
-      if (p.exists()) {
-        p.listFiles().foreach(_.delete()); p.delete()
-      }
-    }
+    if (fresh) graft.ops.Distribute.deleteRecursively(new java.io.File(outPath))
     rows.foreach { case (table, n, status, ts, files) =>
       spark.range(1).select(
           lit(table).as("table_name"),

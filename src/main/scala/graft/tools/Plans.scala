@@ -205,7 +205,7 @@ object Plans {
   /** Streaming ops whose returned DataFrame is a memory-sink readout
     * (explain = LocalTableScan) — the audited evidence is the executed
     * MICRO-BATCH plan captured off the StreamExecution right before
-    * stop() ([[graft.streaming.Streaming.lastMicroBatchPlan]]).
+    * stop() ([[graft.streaming.Streaming.capturePlan]]).
     */
   private val streamingAudited = Seq(
     "streaming_join_outer" -> ("stateful stream-stream left-outer: " +
@@ -606,11 +606,11 @@ object Plans {
       var plan = ""
       var attempt = 0
       while (attempt < 12 && !accepted(plan)) {
-        // clear first: a run that fails before stopCaptured must not
-        // silently re-print the previous op's plan (advice round 10)
-        graft.streaming.Streaming.lastMicroBatchPlan = ""
-        graft.SparkEntry.queries(name)(spark, sfDir).count()
-        plan = graft.streaming.Streaming.lastMicroBatchPlan
+        // capturePlan clears first: a run that fails before its stream
+        // stops must not silently re-print the previous op's plan
+        // (advice round 10)
+        plan = graft.streaming.Streaming.capturePlan(
+          graft.SparkEntry.queries(name)(spark, sfDir).count())._2
         attempt += 1
       }
       require(plan.nonEmpty, s"$name: no micro-batch plan captured")

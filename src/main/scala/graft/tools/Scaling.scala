@@ -137,8 +137,8 @@ object Scaling {
     val sub = all.filterNot(heavy.toSet)
     println(s"measuring ${heavy.size} gated (> $marginBar s warm) + " +
       s"${sub.size} sub-bar queries at sf0.001 / sf0.01 / sf0.1")
-    val spark = graft.Bench.localSession(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = graft.Bench.localSession(sys.env.get("SPARK_GRAFT_CPUS").fold(
+      Runtime.getRuntime.availableProcessors)(_.toInt))
 
     // the bench's timed action, so the sweep's ratios measure the
     // operator's actual work

@@ -137,15 +137,14 @@ object Trace {
       val passes = mutable.ArrayBuffer.empty[Pass]
       while (passes.size < Passes && passes.forall(_.error.isEmpty)) {
         spark.catalog.clearCache()
-        Streaming.lastMicroBatchPlan = ""
         var buildJobs = Int.MaxValue
         var plan = ""
-        val (timed, rec) = record(spark) { rec =>
+        val ((timed, rec), microBatchPlan) = Streaming.capturePlan(record(spark) { rec =>
           Bench.noopPass(spark, build(), between = () => buildJobs = rec.settled(),
             after = df => plan = df.queryExecution.explainString(FormattedMode))
-        }
+        })
         passes += Pass(name, passes.size + 1, timed, rec,
-          math.min(buildJobs, rec.jobs.size), plan, Streaming.lastMicroBatchPlan)
+          math.min(buildJobs, rec.jobs.size), plan, microBatchPlan)
       }
       passes
     }

@@ -179,8 +179,8 @@ class PlanFingerprintSpec extends AnyFunSuite {
 
   /** Micro-batch fingerprints for the streaming heavy tail: the op's
     * returned DataFrame is a memory-sink readout, so the gated plan is
-    * [[graft.streaming.Streaming.lastMicroBatchPlan]] — captured by the
-    * shared stopCaptured() shutdown path right before stop(). Bounds
+    * the one [[graft.streaming.Streaming.capturePlan]] returns — taken
+    * by the shared stream shutdown path right before stop(). Bounds
     * are audited PLANS.md round-10 values with the same 1.5× headroom;
     * `marker` pins the load-bearing stateful operator so a silent
     * rewrite to a stateless (or unbounded-state) shape fails the test.
@@ -255,13 +255,12 @@ class PlanFingerprintSpec extends AnyFunSuite {
     test(s"micro-batch fingerprint: $name (marker $marker, scans ≤ " +
          s"${maxScans}·1.5, state exchanges ≤ ${maxExch}·1.5)") {
       TestSpark.spark.catalog.clearCache()
-      // clear the capture var so a run that never reaches stopCaptured
-      // cannot pass this test against the PREVIOUS op's plan
-      graft.streaming.Streaming.lastMicroBatchPlan = ""
       // running the query executes the feed end-to-end; the shared
-      // stopCaptured() shutdown records the executed micro-batch plan
-      SparkEntry.queries(name)(TestSpark.spark, dir).count()
-      val plan = graft.streaming.Streaming.lastMicroBatchPlan
+      // stream shutdown records the executed micro-batch plan, and
+      // capturePlan clears it first, so a run that never reaches that
+      // shutdown cannot pass this test against the PREVIOUS op's plan
+      val (_, plan) = graft.streaming.Streaming.capturePlan(
+        SparkEntry.queries(name)(TestSpark.spark, dir).count())
       assert(plan.nonEmpty, s"$name captured no micro-batch plan")
       assert(count(plan, marker) >= 1,
         s"$name lost its $marker — the stateful shape was rewritten")

@@ -258,4 +258,40 @@ class StreamingSpec extends AnyFunSuite {
       .as[(Long, Long, Long)].collect().toSet
     assert(out === batch)
   }
+
+  test("statefulSessionize drops its memory sink's temp view: two calls " +
+       "leave the catalog as they found it, and both readouts keep their rows") {
+    val before = spark.catalog.listTables().count()
+    val first = Streaming.statefulSessionize(spark, events, 1800L, scratch("sess_a"))
+    val second = Streaming.statefulSessionize(spark, events, 1800L, scratch("sess_b"))
+    assert(spark.catalog.listTables().count() === before)
+    val rows = first.collect().toSeq.map(_.toString).sorted
+    assert(rows.nonEmpty)
+    assert(second.collect().toSeq.map(_.toString).sorted === rows)
+  }
+
+  test("a failing maintained-state stream surfaces to the caller, stops, " +
+       "and the next op captures its own micro-batch plan") {
+    val root = java.nio.file.Files.createTempDirectory("graft-failing").toString
+    val (src, snap, ckpt) = (s"$root/src", s"$root/snap", s"$root/ckpt")
+    val feed = events.select(col("event_id"), col("user_id"))
+    feed.coalesce(2).write.mode("overwrite").parquet(src)
+    feed.limit(0).repartition(1).write.mode("overwrite")
+      .parquet(Streaming.snapshotDir(snap, -1L))
+    val boom = (_: org.apache.spark.sql.DataFrame,
+                _: org.apache.spark.sql.DataFrame) =>
+      throw new IllegalStateException("merge failed on purpose")
+    val err = intercept[Exception] {
+      Streaming.runSnapshotMaintenance(
+        spark.readStream.schema(feed.schema).parquet(src), boom, snap, ckpt)
+    }
+    def causes(t: Throwable): List[Throwable] =
+      if (t == null) Nil else t :: causes(t.getCause)
+    assert(causes(err).exists(_.getMessage.contains("merge failed on purpose")))
+    assert(spark.streams.active.isEmpty)
+    val (out, plan) = Streaming.capturePlan(
+      Streaming.streamingDedup(spark, events, scratch("after_failure")).count())
+    assert(out === events.count())
+    assert(plan.contains("StreamingDeduplicate"))
+  }
 }
