@@ -157,6 +157,24 @@ object Quality {
     )).as("check")).select("check.*")
   }
 
+  /** The five checks of [[dqReport]], with its names, order, metrics and
+    * thresholds, as (check_name, metric, passed), from the feed's counts:
+    * `rows`, the `missing` required columns, `nullKeys` (rows with any
+    * NULL key) and `distinctKeys` (a NULL key group counts once).
+    * `graft.runner.Pipeline` gates a load on it; [[observedVerdict]]
+    * reads its observable checks.
+    */
+  def verdict(rows: Long, missing: Seq[String], nullKeys: Long,
+              distinctKeys: Long, contract: DqContract): Seq[(String, Long, Boolean)] = {
+    val dups = rows - distinctKeys
+    Seq(
+      ("empty_input", rows, rows > 0),
+      ("required_columns", missing.size.toLong, missing.isEmpty),
+      ("null_keys", nullKeys, nullKeys == 0),
+      ("duplicate_keys", dups, dups == 0),
+      ("low_volume", rows, rows >= contract.minRows))
+  }
+
   /** Zero-extra-scan DQ: attach the contract's metrics to the DataFrame
     * with `Dataset.observe` — row count, per-key null counts, and min
     * rows are computed DURING whatever action the caller runs next
@@ -165,8 +183,10 @@ object Quality {
     * the feed once and twice. The caller reads the metrics off the
     * returned observation after its action completes.
     *
-    * (Duplicate-key counting needs a distinct aggregate, which `observe`
-    * disallows — that one check keeps its own scan in [[dqReport]].)
+    * (`observe` disallows the distinct aggregate the duplicate check
+    * needs. A caller that dedups the feed anyway counts the deduped rows
+    * in the same execution instead, as `graft.runner.Pipeline` does:
+    * they are the distinct keys.)
     */
   def observedChecks(df: DataFrame, contract: DqContract): (DataFrame, org.apache.spark.sql.Observation) = {
     val obs = org.apache.spark.sql.Observation()
@@ -178,17 +198,17 @@ object Quality {
   }
 
   /** Evaluate [[observedChecks]] metrics against the contract — call
-    * after the action on the observed frame has run.
+    * after the action on the observed frame has run. Of [[verdict]]'s
+    * checks it keeps the three the observation measures: the schema and
+    * the distinct keys are not observed.
     */
   def observedVerdict(obs: org.apache.spark.sql.Observation,
                       contract: DqContract): Seq[(String, Long, Boolean)] = {
     val m = obs.get
     val rows = m("row_count").asInstanceOf[Long]
     val nulls = contract.keys.map(k => m(s"null_$k").asInstanceOf[Long]).sum
-    Seq(
-      ("empty_input", rows, rows > 0),
-      ("null_keys", nulls, nulls == 0),
-      ("low_volume", rows, rows >= contract.minRows))
+    verdict(rows, Nil, nulls, rows, contract)
+      .filterNot { case (name, _, _) => Set("required_columns", "duplicate_keys")(name) }
   }
 
   /** Feed-freshness audit: per partition key (e.g. event type or source

@@ -3,9 +3,10 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 /** Dumps `explain("formatted")` for the queries whose physical shape the
-  * scale design depends on, into PLANS.md — reviewable evidence that the
-  * pushdowns/broadcasts/partitionings claimed in README/OPERATORS are the
-  * plans Spark actually runs. Usage: runMain graft.tools.Plans [sfDir]
+  * scale design depends on, into PLANS.md in the working directory —
+  * reviewable evidence that the pushdowns/broadcasts/partitionings
+  * claimed in README/OPERATORS are the plans Spark actually runs.
+  * Usage (from the checkout to regenerate): runMain graft.tools.Plans [sfDir]
   */
 object Plans {
   private val audited = Seq(
@@ -19,7 +20,7 @@ object Plans {
     "near_dedup_incremental" -> "batch × corpus bucket equi-join; never corpus²",
     "pack_sequences" -> "one shuffle to shards; per-shard window cumsum; DIV binning",
     "split_leak_pairs" -> "near-dup pairs + pure-projection split labels (no extra join)",
-    "pipeline_run_failed" -> "DQ aggregate short-circuit; audit write only",
+    "pipeline_run_failed" -> "DQ gate on the deduped feed's observed counts short-circuits; audit write only",
     "minhash_lsh" -> "one-pass signature agg; banding shuffle of ids only",
     "bucketed_join" -> "co-located join, no exchange",
     "salted_join" -> "salt-replicated small side, skew-free shuffle",
@@ -621,7 +622,7 @@ object Plans {
       sb ++= s"\n## $name — $why (the executed micro-batch plan, " +
         "not the readout)\n\n```\n" + normalize(plan) + "```\n"
     }
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
+    Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"wrote PLANS.md (${audited.size} plans)")
     spark.stop()
   }

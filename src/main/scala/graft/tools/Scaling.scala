@@ -14,8 +14,8 @@ import java.nio.file.{Files, Paths}
   * conditions minutes apart, so the RATIOS are far more load-robust
   * than the absolute numbers.
   *
-  * Two output tiers (round-12 verdict item 2 — sub-bar ops used to ship
-  * with no standing measurement):
+  * Two output tiers, written to the working directory (round-12 verdict
+  * item 2 — sub-bar ops used to ship with no standing measurement):
   *  - SCALING.json — every query above `marginBar` (1.5 s) warm in the
   *    newest isolated snapshot, measured 1 cold + 2 warm passes per SF
   *    (warm MIN — the bench's noise methodology). ScalingSpec gates the
@@ -210,8 +210,8 @@ object Scaling {
       println(f"| `$n` | $s%.2f | $a%.2f | $b%.2f | $r%.1fx | $e%.2f " +
         f"| $r2%.1fx | $e2%.2f |")
     }
-    writeFile("/root/repo/SCALING.json", heavyRows, warmPasses = 2)
-    writeFile("/root/repo/SCALING_SUB.json", rows(subTimes),
+    writeFile("SCALING.json", heavyRows, warmPasses = 2)
+    writeFile("SCALING_SUB.json", rows(subTimes),
       warmPasses = 1)
     spark.stop()
   }

@@ -74,11 +74,11 @@ class QualityPipelineSpec extends AnyFunSuite {
   test("pipeline: exception during merge still audits FAILED (ref :266-271)") {
     val out = java.nio.file.Files.createTempDirectory("graft-audit3").toString
     // poison the ts column with a deterministic UDF that throws at
-    // execution time: the DQ scan prunes it (only keys are aggregated), so
-    // the failure surfaces in the merge materialization, not the gate.
+    // execution time: the latest-wins dedup orders by it, so the failure
+    // surfaces in the feed's execution, before the gate has its counts.
     // spark.range (not Seq.toDF) keeps the source out of LocalRelation
     // reach — ConvertToLocalRelation would otherwise evaluate the UDF
-    // eagerly inside the DQ plan's optimization.
+    // eagerly while the plan is optimized.
     val boom = udf((id: Long) => if (id == 12L) throw new RuntimeException("injected") else id)
     val source = spark.range(10, 15).toDF("id")
       .withColumn("key", concat(lit("k"), col("id")))
@@ -131,5 +131,98 @@ class QualityPipelineSpec extends AnyFunSuite {
     assert(rows === Seq(
       ("SUCCESS", 3L, "2026-01-01 06:00:00"),
       ("FAILED: null_keys", 0L, "2026-01-02 06:00:00")))
+  }
+
+  private val loadContract = Quality.DqContract(Seq("id", "key"), Seq("key"))
+
+  private def load(source: org.apache.spark.sql.DataFrame,
+                   target: org.apache.spark.sql.DataFrame,
+                   contract: Quality.DqContract = loadContract,
+                   tiebreak: Seq[org.apache.spark.sql.Column] = Seq(col("id"))) = {
+    val out = java.nio.file.Files.createTempDirectory("graft-load").toString
+    val res = Pipeline.run(spark, source, target, contract,
+      ts = col("v"), tiebreak = tiebreak,
+      tableName = "t", auditPath = s"$out/audit")
+    (res, s"$out/audit")
+  }
+
+  private def auditRow(path: String) = {
+    val rows = spark.read.parquet(path).collect()
+    assert(rows.length === 1)
+    (rows.head.getAs[String]("status"), rows.head.getAs[Long]("record_count"))
+  }
+
+  test("pipeline gate: its metrics equal dqReport's (NULL group and duplicates)") {
+    val df = Seq((Some(1L), "a", 1L), (None, "b", 2L), (Some(1L), "c", 3L),
+      (None, "d", 4L), (Some(2L), "e", 5L), (Some(3L), "f", 6L))
+      .toDF("k", "v", "ts")
+    val (feed, checks) = Pipeline.gate(df, contract, col("ts"), Seq(col("v")))
+    val expected = Quality.dqReport(df, contract).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getBoolean(2))).toSeq
+    assert(checks === expected)
+    assert(checks.find(_._1 == "duplicate_keys").get._2 === 2L) // 1 twice, NULL twice
+    // the materialized feed is the latest-wins dedup, NULL group once
+    assert(feed.as[(Option[Long], String, Long)].collect().toSet ===
+      Set((Some(1L), "c", 3L), (None, "d", 4L), (Some(2L), "e", 5L),
+        (Some(3L), "f", 6L)))
+  }
+
+  test("pipeline: an empty feed, local or fetched, audits FAILED: empty_input,low_volume") {
+    val target = Seq((1L, "a", 1L)).toDF("id", "key", "v")
+    val local = Seq.empty[(Long, String, Long)].toDF("id", "key", "v")
+    val pages = java.nio.file.Files.createTempDirectory("graft-empty-pages")
+    java.nio.file.Files.writeString(pages.resolve("page_1.json"),
+      """{"records":[],"pagination":{"has_next":false}}""")
+    val fetched = graft.sources.Paginated.fetchAll(spark, pages.toString)
+      .select(col("event_id").as("id"), col("event_type").as("key"),
+        col("user_id").as("v"))
+    Seq("local" -> local, "fetched" -> fetched).foreach { case (name, source) =>
+      val (res, audit) = load(source, target)
+      assert(res.status === "FAILED", name)
+      assert(auditRow(audit) === (("FAILED: empty_input,low_volume", 0L)), name)
+      assert(res.merged.count() === 1L, name) // target untouched
+    }
+  }
+
+  test("pipeline: a missing required column audits FAILED: required_columns without a throw") {
+    val source = Seq((10L, "a", 5L), (11L, "a", 9L), (12L, "b", 1L),
+      (13L, "c", 2L), (14L, "d", 3L)).toDF("id", "key", "v")
+    val target = Seq((1L, "z", 1L)).toDF("id", "key", "v")
+    val contract = Quality.DqContract(Seq("id", "key", "extra"), Seq("key"))
+    // also when the dedup's tiebreak names the missing column
+    Seq(Seq(col("id")), Seq(col("extra"))).foreach { tiebreak =>
+      val (res, audit) = load(source, target, contract, tiebreak)
+      assert(res.status === "FAILED")
+      assert(auditRow(audit) === (("FAILED: required_columns", 0L)))
+    }
+  }
+
+  test("pipeline: exception during the merge's execution (poisoned target) audits FAILED") {
+    val boom = udf((id: Long) => if (id == 3L) throw new RuntimeException("injected") else id)
+    val target = spark.range(0, 5).toDF("id")
+      .withColumn("key", concat(lit("t"), col("id")))
+      .withColumn("v", boom(col("id")))
+    val source = Seq((10L, "a", 5L), (11L, "b", 9L)).toDF("id", "key", "v")
+    val out = java.nio.file.Files.createTempDirectory("graft-audit5").toString
+    val thrown = intercept[Throwable] {
+      Pipeline.run(spark, source, target, loadContract.copy(minRows = 1),
+        ts = col("v"), tiebreak = Seq(col("id")),
+        tableName = "t", auditPath = s"$out/audit")
+    }
+    assert(thrown.toString.contains("injected") ||
+      Option(thrown.getCause).exists(_.toString.contains("injected")))
+    val (status, n) = auditRow(s"$out/audit")
+    assert(status.startsWith("FAILED:") && n === 0L)
+  }
+
+  test("pipeline: the SUCCESS record_count is the merged frame's row count") {
+    val source = Seq((10L, "a", 5L), (11L, "a", 9L), (12L, "b", 1L),
+      (13L, "c", 2L), (14L, "d", 3L), (15L, "e", 4L)).toDF("id", "key", "v")
+    val target = Seq((1L, "c", 1L), (2L, "x", 1L), (3L, "y", 1L)).toDF("id", "key", "v")
+    val (res, audit) = load(source, target)
+    assert(res.status === "SUCCESS")
+    // 5 distinct feed keys, plus the 2 target keys the feed does not carry
+    assert(auditRow(audit) === (("SUCCESS", 7L)))
+    assert(res.merged.count() === 7L)
   }
 }
